@@ -1,8 +1,8 @@
 package graft.ingest
 
+import java.net.URI
 import java.util.concurrent.Executors
 
-import scala.collection.mutable
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
@@ -30,6 +30,18 @@ import graft.operators.{KubeOps, ListingOps, TimeOps}
   * fully distributed; only the tiny control decisions (which folder,
   * manifest present) are driver-side, mirroring the reference where the
   * control loop is a single node but the load runs on the cluster.
+  * Each loop lists the bucket ONCE, as a driver-side key list: emptiness,
+  * the manifest gate and the entity names are read off that list, and
+  * the oldest folder and its file set are the loop's only two control
+  * Spark actions. The listing is a recursive `listStatus` walk, not
+  * `listFiles(root, true)`: it skips the per-file `LocatedFileStatus`
+  * (block locations, and on the local FS a permission load per file).
+  * On s3a the walk costs one LIST request per directory instead of one
+  * flat paged listing of the prefix — the same trade Spark's own
+  * `HadoopFSUtils.listLeafFiles` makes for non-HDFS filesystems, and
+  * cheap at control-plane depth (pending/<ts>/<entity>/<file>).
+  * Bucket-scale listings go through [[listKeysDistributed]], which
+  * walks each first-level shard on an executor.
   */
 object IngestPipeline {
 
@@ -72,22 +84,30 @@ object IngestPipeline {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** S1: every object key under `dir` (recursive), relative to
+    * `rootUri`, in `listFiles(dir, true)` order (depth first, each
+    * directory in its own listing order) but without its per-file cost
+    * (see the scale notes above). The one listing routine behind both
+    * listing faces. */
+  private def keysUnder(filesystem: FileSystem, dir: Path, rootUri: URI): Seq[String] =
+    filesystem.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) keysUnder(filesystem, st.getPath, rootUri)
+      else Seq(rootUri.relativize(st.getPath.toUri).getPath)
+    }
+
+  /** Every key under `bucket` on the driver; empty if it does not exist. */
+  private def bucketKeys(spark: SparkSession, bucket: String): Seq[String] = {
+    val root = new Path(bucket)
+    val filesystem = fs(spark, bucket)
+    if (!filesystem.exists(root)) Nil
+    else keysUnder(filesystem, root, filesystem.makeQualified(root).toUri)
+  }
+
   /** S1: list every object key under `bucket` (recursive), relative to
     * the bucket root — the Spark face of `s3.listObjectsV2`. */
   def listKeys(spark: SparkSession, bucket: String): DataFrame = {
     import spark.implicits._
-    val root = new Path(bucket)
-    val filesystem = fs(spark, bucket)
-    val keys = mutable.ArrayBuffer.empty[String]
-    if (filesystem.exists(root)) {
-      val it = filesystem.listFiles(root, true)
-      val rootUri = filesystem.makeQualified(root).toUri
-      while (it.hasNext) {
-        val f = it.next()
-        keys += rootUri.relativize(f.getPath.toUri).getPath
-      }
-    }
-    keys.toSeq.toDF("key")
+    bucketKeys(spark, bucket).toDF("key")
   }
 
   /** S1 at 100 TB: `listKeys` above mirrors the reference's single-node
@@ -95,11 +115,11 @@ object IngestPipeline {
     * control-plane-sized listings, but a bucket with tens of millions of
     * objects belongs on the executors. This face shards the listing the
     * standard way: the driver lists only the FIRST level (the shard
-    * prefixes), and each executor recursively lists its shard — the
-    * driver never holds more than the shard list, and the full key set
-    * is born distributed. Keys are relative to the bucket root and
-    * byte-identical to `listKeys` (including zero-length marker files,
-    * which file-content sources silently drop). */
+    * prefixes), and each executor walks its shard with the same
+    * [[keysUnder]] — the driver never holds more than the shard list,
+    * and the full key set is born distributed. Keys are relative to the
+    * bucket root and byte-identical to `listKeys` (including zero-length
+    * marker files, which file-content sources silently drop). */
   def listKeysDistributed(spark: SparkSession, bucket: String): DataFrame = {
     import spark.implicits._
     val root = new Path(bucket)
@@ -116,14 +136,7 @@ object IngestPipeline {
       .mapPartitions { it =>
         it.flatMap { shard =>
           val p = new Path(shard)
-          val fsys = p.getFileSystem(bcConf.value.value)
-          if (fsys.getFileStatus(p).isDirectory) {
-            val files = fsys.listFiles(p, true)
-            val out = mutable.ArrayBuffer.empty[String]
-            while (files.hasNext)
-              out += rootUri.relativize(files.next().getPath.toUri).getPath
-            out
-          } else Seq(rootUri.relativize(p.toUri).getPath)
+          keysUnder(p.getFileSystem(bcConf.value.value), p, rootUri)
         }
       }
       .toDF("key")
@@ -136,9 +149,34 @@ object IngestPipeline {
     rows.headOption.map(r => IngestParams(r.getString(0), r.getString(1)))
   }
 
+  /** T3: the manifest commit-marker key (ingestor.js:109–118). */
+  private def manifestKey(ingestName: String): String =
+    s"pending/$ingestName/manifest.json"
+
   /** T3: the manifest commit-marker gate (ingestor.js:109–118). */
   def manifestPresent(listing: DataFrame, ingestName: String): Boolean =
-    !listing.filter(col("key") === s"pending/$ingestName/manifest.json").isEmpty
+    !listing.filter(col("key") === manifestKey(ingestName)).isEmpty
+
+  /** The reference's setTimeout-poll-until-success loop, ONCE for all
+    * four pollers: counts attempts, swallows a NonFatal supplier
+    * failure as "poll again" (ingestor.js:76–80 — AWS/exec error ⇒
+    * log + retry), throws past `maxPolls` with the last swallowed
+    * failure, if any, as the cause. */
+  private def pollUntil[A](maxPolls: Int, what: String)
+                          (attempt: () => Option[A]): (A, Int) = {
+    var polls = 0
+    var lastError: Throwable = null
+    while (polls < maxPolls) {
+      polls += 1
+      val r = try attempt()
+              catch { case scala.util.control.NonFatal(e) => lastError = e; None }
+      r match {
+        case Some(a) => return (a, polls)
+        case None => ()
+      }
+    }
+    throw new IllegalStateException(s"$what after $maxPolls polls", lastError)
+  }
 
   /** The reference's `start` loop (ingestor.js:71–103) with an
     * INJECTABLE listing supplier — the mock-sequenced jest contract
@@ -150,25 +188,6 @@ object IngestPipeline {
     * can assert the exact poll count per wait state like the jest
     * mocks do. Driver-paced like the reference's setTimeout loop (the
     * production face is IngestStream's ProcessingTime trigger). */
-  /** The reference's setTimeout-poll-until-success loop, ONCE for all
-    * four pollers: counts attempts, swallows a NonFatal supplier
-    * failure as "poll again" (ingestor.js:76–80 — AWS/exec error ⇒
-    * log + retry), throws past `maxPolls`. */
-  private def pollUntil[A](maxPolls: Int, what: String)
-                          (attempt: () => Option[A]): (A, Int) = {
-    var polls = 0
-    while (polls < maxPolls) {
-      polls += 1
-      val r = try attempt()
-              catch { case scala.util.control.NonFatal(_) => None }
-      r match {
-        case Some(a) => return (a, polls)
-        case None => ()
-      }
-    }
-    throw new IllegalStateException(s"$what after $maxPolls polls")
-  }
-
   def pollForIngest(nextListing: () => DataFrame,
                     maxPolls: Int = 1000): (IngestParams, Int) =
     pollUntil(maxPolls, "no valid ingest") { () =>
@@ -256,19 +275,16 @@ object IngestPipeline {
           lower(col("SHA256")) === col("actual_sha256")).as("ok"))
   }
 
-  /** Entity names present in the ingest folder (subdirectories with a
+  /** Entity names present in the ingest folder: the subdirectories of
+    * `pending/<name>/` holding at least one file (a
     * `<entity>_headers.csv.gz` / `<entity>_sample.csv.gz` pair —
-    * s3-client.js:20–29). */
-  def entities(listing: DataFrame, ingestName: String): Seq[String] =
-    listing
-      .filter(col("key").startsWith(s"pending/$ingestName/"))
-      .select(get(split(col("key"), "/"), lit(2)).as("entity"),
-        get(split(col("key"), "/"), lit(3)).as("file"))
-      .filter(col("file").isNotNull)
-      .select("entity").distinct().collect().map(_.getString(0)).toSeq.sorted
+    * s3-client.js:20–29), sorted. */
+  private def entities(keys: Seq[String], ingestName: String): Seq[String] =
+    keys.filter(_.startsWith(s"pending/$ingestName/"))
+      .map(_.split("/", -1))
+      .collect { case segs if segs.length > 3 => segs(2) }
+      .distinct.sorted
 
-  /** S5: load one entity's CSV.gz pair — header row shipped in the
-    * sidecar `_headers` file, data in `_sample` (schema-on-file). */
   /** S5: entity CSV.gz with sidecar-header schema, served by the
     * DataSource V2 implementation (sources/v2/GraftIngestSource —
     * per-file partitions, column pruning, filter pushdown;
@@ -385,22 +401,24 @@ object IngestPipeline {
       : Option[IngestMetrics] = {
     import spark.implicits._
     val bound = sinks.getOrElse(Sinks.parquet(spark, warehouse))
-    val listing = listKeys(spark, bucket)
-    if (listing.isEmpty) return None
-    val hasTs = ListingOps.hasTimestampFolders(listing)
-      .collect().headOption.exists(_.getBoolean(0))
-    if (!hasTs) return None
+    // one driver-side listing per loop; the only control-plane Spark
+    // actions are the oracle-checked oldestPendingIngest and ingestFiles
+    val keys = bucketKeys(spark, bucket)
+    if (keys.isEmpty) return None
+    val listing = keys.toDF("key")
+    // oldestPendingIngest keeps only timestamp folders, so None also
+    // covers the no-timestamp-folder wait state
     val params = oldestPending(listing) match {
       case None => return None
       case Some(p) => p
     }
-    if (!manifestPresent(listing, params.ingestName)) return None
+    if (!keys.contains(manifestKey(params.ingestName))) return None
 
     val times = new Times
     times.ingestFiles = ListingOps.ingestFiles(listing, params.ingestName)
       .collect().map(_.getString(0)).toSeq
     val startSec = clock()
-    val entityNames = entities(listing, params.ingestName)
+    val entityNames = entities(keys, params.ingestName)
     runSinks(spark, bucket, warehouse, params, entityNames, times, clock,
       onSinkEvent, podsFor, settle, sinks = Some(bound))
 

@@ -21,6 +21,10 @@ class IngestPipelineSpec extends SparkSuite {
     val wh = tmpDir("graft-wh")
     // empty
     assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty)
+    // only non-timestamp folders, even with a marker and a manifest
+    makeIngest(bucket, "junk", "bulk")
+    assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty)
+    assert(Files.exists(Paths.get(s"$bucket/pending/junk/manifest.json")))
     // folder without marker file
     writeGz(s"$bucket/pending/1538055240/person/person_headers.csv.gz", "a,b\n")
     assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty)
@@ -229,6 +233,72 @@ class IngestPipelineSpec extends SparkSuite {
     assert(IngestPipeline.listKeysDistributed(spark, tmpDir("graft-empty")).isEmpty)
   }
 
+  /** Reference listing for `listKeys`: Hadoop's own `listFiles(root, true)`. */
+  private def listFilesKeys(bucket: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(bucket)
+    val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootUri = fsys.makeQualified(root).toUri
+    val it = fsys.listFiles(root, true)
+    val keys = mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) keys += rootUri.relativize(it.next().getPath.toUri).getPath
+    keys.toSeq
+  }
+
+  test("control-plane parity on an awkward bucket: listing, folder, type, entities") {
+    import org.apache.spark.sql.functions.{col, get, lit, split}
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    Files.createDirectories(Paths.get(s"$bucket/other"))
+    Files.writeString(Paths.get(s"$bucket/other/readme.txt"), "not pending")
+    makeIngest(bucket, "junk", "bulk")                     // non-numeric + marker
+    writeGz(s"$bucket/pending/1538055230/person/person_headers.csv.gz",
+      "person_id,name,age\n")                              // no marker file
+    makeIngest(bucket, "1538055240", "incremental")        // the oldest valid
+    writeGz(s"$bucket/pending/1538055240/company/company_headers.csv.gz",
+      "company_id,name\n")
+    writeGz(s"$bucket/pending/1538055240/company/company_sample.csv.gz",
+      "1,acme\n")
+    writeGz(s"$bucket/pending/1538055240/person/archive/person_old.csv.gz",
+      "9,old,99\n")                                        // nested deeper
+    makeIngest(bucket, "1538055250", "bulk")
+    assert(Files.size(Paths.get(s"$bucket/pending/1538055240/incremental.txt")) == 0)
+
+    val expectedKeys = listFilesKeys(bucket)
+    assert(expectedKeys.contains("other/readme.txt"))
+    assert(expectedKeys.contains("pending/1538055240/incremental.txt"))
+    assert(IngestPipeline.listKeys(spark, bucket).collect().map(_.getString(0)).toSeq
+      == expectedKeys)
+    assert(IngestPipeline.listKeysDistributed(spark, bucket)
+      .collect().map(_.getString(0)).toSet == expectedKeys.toSet)
+
+    // the decisions the DataFrame control plane made on that listing
+    import spark.implicits._
+    val listing = expectedKeys.toDF("key")
+    val expected = IngestPipeline.oldestPending(listing).get
+    val expectedEntities = listing
+      .filter(col("key").startsWith(s"pending/${expected.ingestName}/"))
+      .select(get(split(col("key"), "/"), lit(2)).as("entity"),
+        get(split(col("key"), "/"), lit(3)).as("file"))
+      .filter(col("file").isNotNull)
+      .select("entity").distinct().collect().map(_.getString(0)).toSeq.sorted
+    assert(expected == IngestPipeline.IngestParams("1538055240", "incremental"))
+    assert(expectedEntities == Seq("company", "person"))
+
+    val loads = mutable.ArrayBuffer.empty[(String, String)]
+    final class Rec(val name: String) extends graft.ingest.LoadSink {
+      def writeEntity(entity: String, df: org.apache.spark.sql.DataFrame): Unit =
+        loads.synchronized { loads += (name -> entity) }
+    }
+    val binding = graft.ingest.Sinks(load = n => new Rec(n), metrics = _ => ())
+    val m = IngestPipeline.processPendingOnce(spark, bucket, wh,
+      sinks = Some(binding)).get
+    assert(IngestPipeline.IngestParams(m.ingest, m.`type`) == expected)
+    assert(loads.toSeq == Seq("neo4j", "elastic").flatMap(s => expectedEntities.map(s -> _)))
+    assert(!Files.exists(Paths.get(s"$bucket/pending/1538055240")))
+    assert(Files.exists(Paths.get(s"$bucket/pending/junk")))
+    assert(Files.exists(Paths.get(s"$bucket/pending/1538055230")))
+  }
+
   test("manifest reconciliation reports undeclared and missing files") {
     val bucket = tmpDir("graft-bucket")
     makeIngest(bucket, "1538055240", "bulk")
@@ -311,6 +381,17 @@ class IngestPipelineSpec extends SparkSuite {
       |  {"name": "build", "ready": false, "restartCount": 0,
       |   "state": {"running": {"startedAt": "2018-10-09T10:10:00Z"}}}]}}"""
       .stripMargin
+
+  test("a poller that never succeeds chains its last swallowed error as the cause") {
+    var n = 0
+    val e = intercept[IllegalStateException] {
+      IngestPipeline.pollForJobComplete(spark, () => {
+        n += 1; throw new RuntimeException(s"kubectl error $n")
+      }, maxPolls = 3)
+    }
+    assert(e.getMessage == "job not complete after 3 polls")
+    assert(e.getCause != null && e.getCause.getMessage == "kubectl error 3")
+  }
 
   test("checkJobStatus polls through error, empty stdout and a running job " +
        "— 4 polls to completion (ingestor.spec.js 'wait for a job to " +

@@ -8,6 +8,9 @@
 #      deltas — a lost broadcast / new shuffle cannot ship silently; a
 #      deliberate plan change is shipped by committing the regenerated
 #      snapshot with a STATUS.md note, which makes the diff clean again)
+#   4. the benchmark's own tests (perfbench/test_bench.py): every workload,
+#      the ingest loop included, runs end to end at sf0.001 with no failed
+#      operation
 # Leak/copy checks and fuzz seeds stay separate (driver-run / per-change)
 # but are listed here for the round checklist.
 #
@@ -19,21 +22,24 @@ SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
 
 if [ "$SKIP_TESTS" = 0 ]; then
-  echo "=== cadence 1/3: sbt test ==="
+  echo "=== cadence 1/4: sbt test ==="
   sbt -batch test 2>&1 | tail -5
 else
-  echo "=== cadence 1/3: sbt test SKIPPED (--skip-tests) ==="
+  echo "=== cadence 1/4: sbt test SKIPPED (--skip-tests) ==="
 fi
 
-echo "=== cadence 2/3: Verify @ sf0.01 + oracle compare ==="
+echo "=== cadence 2/4: Verify @ sf0.01 + oracle compare ==="
 rm -rf /tmp/cadence_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/cadence_vout" \
   2>&1 | grep -E "\[verify\].*failed" && { echo "VERIFY FAILED"; exit 1; } || true
 python3 tools/check_correctness.py /root/testdata/sf0.01 /tmp/cadence_vout
 
-echo "=== cadence 3/3: plan snapshot + diff_plans gate ==="
+echo "=== cadence 3/4: plan snapshot + diff_plans gate ==="
 sbt -batch "runMain graft.PlanSnapshot" 2>&1 | tail -2
 python3 tools/diff_plans.py
+
+echo "=== cadence 4/4: benchmark tests (ingest loop end to end) ==="
+python3 perfbench/test_bench.py
 
 echo "=== cadence PASSED ==="
 echo "(still per-round: fuzz_oracle.py fresh seeds, LEAKCHECK/COPYCHECK,"
