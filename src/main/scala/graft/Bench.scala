@@ -275,7 +275,8 @@ object Bench {
     val runT0 = System.nanoTime()
     // A crashed query must never masquerade as a fast one: record -1 and
     // list it in "errs" so the JSON line distinguishes fast from broken.
-    // Per-query share of the named session-cache builds (BuildTimers):
+    // Per-query share of the named session-cache builds (SessionCache,
+    // timed through BuildTimers):
     // the memoized chains bill their one-time construction to whichever
     // query touches them FIRST, so the cold number alone can't separate
     // "this query got slower" from "this query now pays a shared build".
@@ -374,8 +375,8 @@ object Bench {
     // also charges whatever session-cache build it happened to trigger.
     // So, AFTER all warm retries (whose warm caches must stay intact),
     // each flagged query gets a genuine second first-touch: release
-    // every session cache (DedupOps.releaseShared cascades to the
-    // graph/similarity/text/served families), re-run once, and record
+    // every session cache (DedupOps.releaseShared → SessionCache.releaseAll),
+    // re-run once, and record
     // the fresh cold with its own foreign window and its own build
     // delta — BENCH_rN's dirty cold rows then carry a clean reading of
     // their own instead of needing a hand-certified side window.

@@ -2,16 +2,14 @@ package graft
 
 /** Wall-clock attribution for the session-cache builds (r12 judge #1).
   *
-  * Every memoized chain (shingle tables, CC labels, BPE/LR/DSIR
-  * training, IVF/RP/PQ artifacts, graph caches, span coverage) runs its
-  * build exactly once per session and bills that wall time to whichever
-  * registered query touches it FIRST — which made cold-total
-  * regressions unattributable from query-level diffs alone. Each build
-  * body is wrapped in [[timed]], and Bench diffs [[snapshot]] around
-  * every query run, so BENCH_DETAIL carries both the global
+  * Every memoized artifact goes through [[SessionCache.getOrBuild]],
+  * which runs its build once per (session, name, key) inside [[timed]]
+  * — the only caller — and so bills that wall time under the entry's
+  * name to whichever query touches it FIRST. Bench diffs [[snapshot]]
+  * around every query run, so BENCH_DETAIL carries both the global
   * `"builds": {name: sec}` table and a per-query `build_sec` — the part
-  * of a cold number that is shared-chain construction rather than the
-  * query's own plan.
+  * of a cold number that is shared-artifact construction rather than
+  * the query's own plan.
   *
   * Driver-state note: the map is bounded by the number of NAMED build
   * sites (a few dozen), not by data size. */

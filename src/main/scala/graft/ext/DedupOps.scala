@@ -18,42 +18,8 @@ import graft.model.Tables
   */
 object DedupOps {
 
-  /** Caches shared across the dedup query family (shingle tables, the
-    * verified pair set). They are persisted on purpose — sibling queries
-    * reuse them through CacheManager plan matching — but a long-lived
-    * session should be able to let them go: `releaseShared()` unpersists
-    * everything this object pinned. Verify/Bench call it after the last
-    * dedup query. */
-  private val sharedCaches =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private[graft] def registerCache(df: DataFrame): DataFrame =
-    sharedCaches.synchronized { sharedCaches += df; df }
-  def releaseShared(): Unit = {
-    sharedCaches.synchronized {
-      sharedCaches.foreach(_.unpersist())
-      sharedCaches.clear()
-    }
-    // every sub-cache clear stays OUTSIDE the sharedCaches monitor:
-    // their builders (hashedShingles, simhashPairs, fastssIndex,
-    // spanCoverage, nearDupPairs, …) acquire their own lock FIRST and
-    // then call registerCache (which takes sharedCaches) — clearing
-    // them while holding sharedCaches would invert that lock order and
-    // allow an ABBA deadlock under concurrent use
-    clusterCache.synchronized(clusterCache.clear())
-    shingleCaches.synchronized(shingleCaches.clear())
-    spanCache.synchronized(spanCache.clear())
-    clearDecontamCache()
-    clearFastssCache()
-    clearFastss2Cache()
-    clearSimhashCache()
-    graft.ext.SimilarityOps.clearNearDupCache()
-    graft.operators.GraphOps.clearGraphCaches()
-    graft.operators.Relational.clearRelationalCaches()
-    graft.ext.TextOps.clearSessionState()
-    graft.ext.MultimodalOps.clearMediaCache()
-    graft.streaming.ServedArtifacts.clear()
-    graft.streaming.CusumStream.clearDailyCache()
-  }
+  /** Releases every session cache (see [[graft.SessionCache]]). */
+  def releaseShared(): Unit = graft.SessionCache.releaseAll()
 
   /** Memoized per-(dir, n) shingle tables shared by the whole dedup
     * family: `docs` = (doc_id, sh: array<string>) — the string shingle
@@ -65,11 +31,9 @@ object DedupOps {
     * string arrays (the sf0.1 verify stage dropped ~2.5× even before
     * the PPJoin filters shrank its input ~9×).
     * Both tables materialize once per session (eager count before the
-    * consuming plans fan out) and are released by [[releaseShared]]. */
-  private val shingleCaches =
-    scala.collection.mutable.Map.empty[(String, Int, String), DataFrame]
-
-  /** The two shingle faces build INDEPENDENTLY and lazily: the hashed
+    * consuming plans fan out).
+    *
+    * The two shingle faces build INDEPENDENTLY and lazily: the hashed
     * long-array table — what candidate generation, verification and the
     * whole cluster/capstone chain consume — derives straight from text
     * in one fused codegen'd scan (WordShingles ∘ HashStringArray), so
@@ -82,33 +46,29 @@ object DedupOps {
     * only ever touch the 8-byte hashes. */
   private[graft] def hashedShingles(spark: SparkSession, dir: String,
                                     n: Int): DataFrame =
-    shingleCaches.synchronized {
-      shingleCaches.getOrElseUpdate((dir, n, "hashed"), graft.BuildTimers.timed("shingles_hashed") {
-        // single-file inputs arrive as one partition; spread the per-row
-        // shingle compute across cores before persisting
-        val hashed = registerCache(Tables.documents(spark, dir)
-          .transform(FanOut(_))
-          .select(col("doc_id"),
-            bc(graft.functions.HashStringArray(br(shingles(col("text"), n)))).as("hs"))
-          .filter(size(col("hs")) > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        hashed.count()
-        hashed
-      })
+    graft.SessionCache.getOrBuild(spark, "shingles_hashed", (dir, n)) {
+      // single-file inputs arrive as one partition; spread the per-row
+      // shingle compute across cores before persisting
+      val hashed = Tables.documents(spark, dir)
+        .transform(FanOut(_))
+        .select(col("doc_id"),
+          bc(graft.functions.HashStringArray(br(shingles(col("text"), n)))).as("hs"))
+        .filter(size(col("hs")) > 0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      hashed.count()
+      hashed
     }
 
   private[graft] def stringShingles(spark: SparkSession, dir: String,
                                     n: Int): DataFrame =
-    shingleCaches.synchronized {
-      shingleCaches.getOrElseUpdate((dir, n, "strings"), graft.BuildTimers.timed("shingles_strings") {
-        val docs = registerCache(Tables.documents(spark, dir)
-          .transform(FanOut(_))
-          .select(col("doc_id"), shingles(col("text"), n).as("sh"))
-          .filter(size(col("sh")) > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        docs.count()
-        docs
-      })
+    graft.SessionCache.getOrBuild(spark, "shingles_strings", (dir, n)) {
+      val docs = Tables.documents(spark, dir)
+        .transform(FanOut(_))
+        .select(col("doc_id"), shingles(col("text"), n).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      docs.count()
+      docs
     }
 
   private[graft] def shingleTables(spark: SparkSession, dir: String,
@@ -178,7 +138,13 @@ object DedupOps {
     * materialization. */
   private[graft] def ngramJaccardPairsUnsorted(
       spark: SparkSession, dir: String,
-      n: Int = 3, threshold: Double = 0.8): DataFrame = {
+      n: Int = 3, threshold: Double = 0.8): DataFrame =
+    graft.SessionCache.getOrBuild(spark, "jaccard_pairs", (dir, n, threshold))(
+      jaccardPairs(spark, dir, n, threshold))._2
+
+  /** (prefix index, verified pair set), both persisted lazily. */
+  private def jaccardPairs(spark: SparkSession, dir: String, n: Int,
+                           threshold: Double): (DataFrame, DataFrame) = {
     // candidate generation AND verification run on 8-byte shingle HASH
     // ids (see shingleTables): Jaccard over the hashed sets equals
     // Jaccard over the string sets unless two distinct shingles of the
@@ -207,10 +173,10 @@ object DedupOps {
     // (doc_id, shingle_hash) pairs for ~20% of shingles — so this is the
     // classic "materialize the signature index once" step of a
     // distributed similarity join.
-    val prefix = registerCache(ranked
+    val prefix = ranked
       .filter(col("r") <= col("n_sh") - alpha + 1)
       .select("doc_id", "shingle", "r", "n_sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // PPJoin-style pruning INSIDE the candidate join (Xiao et al.,
     // WWW'08) — both are cheap integer predicates evaluated before any
     // row leaves the join, and together they cut the sf0.1 candidate
@@ -246,7 +212,7 @@ object DedupOps {
     // this exact plan, and CacheManager plan-matching lets both read one
     // materialization — at scale this is the shared "duplicate pairs"
     // table every downstream dedup step consumes
-    registerCache(verified
+    (prefix, verified
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -402,16 +368,10 @@ object DedupOps {
     * (`dedupClusters`, `keeperByQuality`) share one loop run per
     * (dir, n, threshold) — the labels are localCheckpoint'ed, so reuse
     * is a cheap scan, and the loop is deterministic. */
-  private val clusterCache =
-    scala.collection.mutable.Map.empty[(String, Int, Double), DataFrame]
-
   private def clusterLabels(spark: SparkSession, dir: String,
                             n: Int, threshold: Double): DataFrame =
-    clusterCache.synchronized {
-      clusterCache.getOrElseUpdate((dir, n, threshold),
-        graft.BuildTimers.timed("dedup_cluster_labels")(
-          runClusterLoop(spark, dir, n, threshold)))
-    }
+    graft.SessionCache.getOrBuild(spark, "dedup_cluster_labels",
+      (dir, n, threshold))(runClusterLoop(spark, dir, n, threshold))
 
   def dedupClusters(spark: SparkSession, dir: String,
                     n: Int = 3, threshold: Double = 0.8): DataFrame =
@@ -697,12 +657,6 @@ object DedupOps {
     * more candidate collisions for guaranteed recall, which is the
     * standard cost — at 100 TB pick the smallest radius the corpus
     * needs, or add Manku's block-permutation tables for selectivity. */
-  private val simhashCaches = scala.collection.mutable
-    .Map.empty[(SparkSession, String, Boolean), (DataFrame, Long)]
-
-  private[graft] def clearSimhashCache(): Unit =
-    simhashCaches.synchronized(simhashCaches.clear())
-
   def simhashPairs(spark: SparkSession, dir: String,
                    maxHamming: Int = 8, md5Mode: Boolean = false): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, "need 0 <= maxHamming < 64")
@@ -721,15 +675,13 @@ object DedupOps {
     // relation AQE broadcasts (a pre-partitioned cached explode was
     // measured SLOWER — exact in-memory stats pushed it over the
     // broadcast threshold and bought two sort-merge sorts per run).
-    val (docs, nDocs) = simhashCaches.synchronized {
-      simhashCaches.getOrElseUpdate((spark, dir, md5Mode),
-        graft.BuildTimers.timed("simhash_fingerprints") {
-          val t = registerCache(Tables.documents(spark, dir)
-            .transform(FanOut(_))
-            .select(col("doc_id"), simhash("text", md5Mode).as("sh"))
-            .persist())
-          (t, t.count()) // materializes the cache; count feeds the gate
-        })
+    val (docs, nDocs) = graft.SessionCache.getOrBuild(spark,
+        "simhash_fingerprints", (dir, md5Mode)) {
+      val t = Tables.documents(spark, dir)
+        .transform(FanOut(_))
+        .select(col("doc_id"), simhash("text", md5Mode).as("sh"))
+        .persist()
+      (t, t.count()) // materializes the cache; count feeds the gate
     }
     // mask via -1L >>> (64 - w): the naive (1L << w) - 1 is 0 at w=64
     // (JVM shifts are mod 64), which would collapse maxHamming=0 into
@@ -810,27 +762,17 @@ object DedupOps {
   /** Memoized contamination report (doc-count-sized) — TWO registered
     * faces consume it (`dedup_decontaminate` and the `dedup_curated`
     * capstone), and unmemoized each ran the full two-sided shingle
-    * explode + gram join per call (r20, guide §5). Released with the
-    * session caches. */
-  private val decontamCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearDecontamCache(): Unit =
-    decontamCache.synchronized(decontamCache.clear())
-
-  /** Unsorted memoized report — the curated capstone consumes this
-    * directly (its anti-join needs no order). */
+    * explode + gram join per call (r20, guide §5). The unsorted
+    * report is what the curated capstone consumes directly (its
+    * anti-join needs no order). */
   private[graft] def decontamReport(spark: SparkSession,
                                     dir: String): DataFrame =
-    decontamCache.synchronized {
-      decontamCache.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("decontam_report") {
-          val docs = Tables.documents(spark, dir)
-          registerCache(contaminationUnsorted(
-            docs.filter(col("source") =!= "src0"),
-            docs.filter(col("source") === "src0"), n = 5, hashed = false)
-            .persist())
-        })
+    graft.SessionCache.getOrBuild(spark, "decontam_report", dir) {
+      val docs = Tables.documents(spark, dir)
+      contaminationUnsorted(
+        docs.filter(col("source") =!= "src0"),
+        docs.filter(col("source") === "src0"), n = 5, hashed = false)
+        .persist()
     }
 
   /** Query face: documents from source 'src0' act as the eval holdout;
@@ -902,33 +844,23 @@ object DedupOps {
     * dir) — the lsh_signatures discipline applied to the record-linkage
     * index: (id, name, k) exploded keys, PRE-PARTITIONED on k so the
     * candidate self-join reads both sides exchange-free from one
-    * cache. Built once per session (wall-timed `fastss_index`),
-    * released with the other shared caches. */
-  private val fastssCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearFastssCache(): Unit =
-    fastssCaches.synchronized(fastssCaches.clear())
-
+    * cache. Built once per session (wall-timed `fastss_index`). */
   private[graft] def fastssIndex(spark: SparkSession, dir: String): DataFrame =
-    fastssCaches.synchronized {
-      fastssCaches.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("fastss_index") {
-          val c = Tables.customer(spark, dir)
-            .select(col("c_custkey").as("id"), col("c_name").as("name"))
-          // array_distinct: a run of j equal chars yields the same
-          // deletion string j times — without it every candidate pair
-          // is emitted up to j_a×j_b times into the join (64× on
-          // zero-padded keys) before the distinct can collapse it.
-          // Dedup per-row, pre-explode, pre-shuffle.
-          registerCache(c.select(col("id"), col("name"), explode(expr(
-            """array_distinct(transform(sequence(0, length(name)),
-              |  i -> xxhash64(CASE WHEN i = 0 THEN name
-              |    ELSE concat(substring(name, 1, i - 1),
-              |                substring(name, i + 1)) END)))""".stripMargin)).as("k"))
-            .repartition(col("k"))
-            .persist())
-        })
+    graft.SessionCache.getOrBuild(spark, "fastss_index", dir) {
+      val c = Tables.customer(spark, dir)
+        .select(col("c_custkey").as("id"), col("c_name").as("name"))
+      // array_distinct: a run of j equal chars yields the same
+      // deletion string j times — without it every candidate pair
+      // is emitted up to j_a×j_b times into the join (64× on
+      // zero-padded keys) before the distinct can collapse it.
+      // Dedup per-row, pre-explode, pre-shuffle.
+      c.select(col("id"), col("name"), explode(expr(
+        """array_distinct(transform(sequence(0, length(name)),
+          |  i -> xxhash64(CASE WHEN i = 0 THEN name
+          |    ELSE concat(substring(name, 1, i - 1),
+          |                substring(name, i + 1)) END)))""".stripMargin)).as("k"))
+        .repartition(col("k"))
+        .persist()
     }
 
   /** Memoized FastSS d=2 index: the up-to-2-deletion neighborhood of
@@ -939,43 +871,32 @@ object DedupOps {
     * aligned edit positions can be deleted from each side, so the
     * 2-deletion neighborhoods intersect; the exact edit_within2 verify
     * then removes every false candidate (hash collisions included). */
-  private val fastss2Caches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearFastss2Cache(): Unit = {
-    fastss2Caches.synchronized(fastss2Caches.clear())
-    fastss2PairCaches.synchronized(fastss2PairCaches.clear())
-  }
-
   private[graft] def fastss2Index(spark: SparkSession, dir: String): DataFrame =
-    fastss2Caches.synchronized {
-      fastss2Caches.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("fastss2_index") {
-          val c = Tables.customer(spark, dir)
-            .select(col("c_custkey").as("id"), col("c_name").as("name"))
-          // d0 + d1 variants (the d=1 neighborhood) ++ d2 variants
-          // (delete positions i < j). sequence() guards: Spark's
-          // sequence(a, b) DESCENDS when a > b, so the i-range stops at
-          // len-1 and the whole d2 arm is fenced behind len >= 2.
-          // array_distinct pre-explode for the run-of-equal-chars
-          // multiplicity (same reasoning as the d=1 index).
-          registerCache(c.select(col("id"), col("name"), explode(expr(
-            """array_distinct(transform(concat(
-              |  transform(sequence(0, length(name)),
-              |    i -> CASE WHEN i = 0 THEN name
-              |      ELSE concat(substring(name, 1, i - 1),
-              |                  substring(name, i + 1)) END),
-              |  CASE WHEN length(name) >= 2 THEN
-              |    flatten(transform(sequence(1, length(name) - 1), i ->
-              |      transform(sequence(i + 1, length(name)), j ->
-              |        concat(substring(name, 1, i - 1),
-              |               substring(name, i + 1, j - i - 1),
-              |               substring(name, j + 1)))))
-              |  ELSE CAST(array() AS ARRAY<STRING>) END),
-              |  s -> xxhash64(s)))""".stripMargin)).as("k"))
-            .repartition(col("k"))
-            .persist())
-        })
+    graft.SessionCache.getOrBuild(spark, "fastss2_index", dir) {
+      val c = Tables.customer(spark, dir)
+        .select(col("c_custkey").as("id"), col("c_name").as("name"))
+      // d0 + d1 variants (the d=1 neighborhood) ++ d2 variants
+      // (delete positions i < j). sequence() guards: Spark's
+      // sequence(a, b) DESCENDS when a > b, so the i-range stops at
+      // len-1 and the whole d2 arm is fenced behind len >= 2.
+      // array_distinct pre-explode for the run-of-equal-chars
+      // multiplicity (same reasoning as the d=1 index).
+      c.select(col("id"), col("name"), explode(expr(
+        """array_distinct(transform(concat(
+          |  transform(sequence(0, length(name)),
+          |    i -> CASE WHEN i = 0 THEN name
+          |      ELSE concat(substring(name, 1, i - 1),
+          |                  substring(name, i + 1)) END),
+          |  CASE WHEN length(name) >= 2 THEN
+          |    flatten(transform(sequence(1, length(name) - 1), i ->
+          |      transform(sequence(i + 1, length(name)), j ->
+          |        concat(substring(name, 1, i - 1),
+          |               substring(name, i + 1, j - i - 1),
+          |               substring(name, j + 1)))))
+          |  ELSE CAST(array() AS ARRAY<STRING>) END),
+          |  s -> xxhash64(s)))""".stripMargin)).as("k"))
+        .repartition(col("k"))
+        .persist()
     }
 
   /** FastSS d=2 fuzzy self-join (`q_fuzzy_join2`): neighbor census at
@@ -997,39 +918,28 @@ object DedupOps {
     * sf0.1, 16 B each), so the session caches it the way the near-dup
     * family caches its verified pairs and warm runs pay only the
     * census aggregate. */
-  private val fastss2PairCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   private[graft] def fastss2Pairs(spark: SparkSession, dir: String): DataFrame =
-    fastss2PairCaches.synchronized {
-      fastss2PairCaches.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("fastss2_pairs") {
-          val keyed = fastss2Index(spark, dir)
-          val p = registerCache(keyed.as("a")
-            .join(keyed.as("b"),
-              col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-            .filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-              graft.functions.EditWithin2(
-                org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("a.name")),
-                org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("b.name")))))
-            .select(col("a.id").as("a"), col("b.id").as("b"))
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          p.count()
-          // the d=2 index exists only to build this pair set: release
-          // its storage NOW (the pair cache is output-sized; the index
-          // is corpus × ~len²/2-keys sized and would otherwise occupy
-          // storage memory for the rest of the session, evicting
-          // caches that are still read — measured as 3-7× slower
-          // late-session rebuilds under an 8g heap). A later rebuild
-          // after releaseShared() re-creates it from scratch either
-          // way; the double-unpersist releaseShared() then performs is
-          // a no-op.
-          fastss2Caches.synchronized {
-            fastss2Caches.remove((spark, dir)).foreach(_.unpersist(false))
-          }
-          p
-        })
+    graft.SessionCache.getOrBuild(spark, "fastss2_pairs", dir) {
+      val keyed = fastss2Index(spark, dir)
+      val p = keyed.as("a")
+        .join(keyed.as("b"),
+          col("a.k") === col("b.k") && col("a.id") < col("b.id"))
+        .filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
+          graft.functions.EditWithin2(
+            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("a.name")),
+            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("b.name")))))
+        .select(col("a.id").as("a"), col("b.id").as("b"))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      // the d=2 index exists only to build this pair set: release
+      // its storage NOW (the pair cache is output-sized; the index
+      // is corpus × ~len²/2-keys sized and would otherwise occupy
+      // storage memory for the rest of the session, evicting
+      // caches that are still read — measured as 3-7× slower
+      // late-session rebuilds under an 8g heap)
+      graft.SessionCache.evict(spark, "fastss2_index", dir)
+      p
     }
 
   def editDistanceNeighbors2(spark: SparkSession, dir: String): DataFrame = {
@@ -1150,9 +1060,10 @@ object DedupOps {
     // guide §5). The batch is small BY DESIGN (a day's crawl), so
     // persisting it is exactly what the production pipeline does;
     // the historical side stays streamed and uncached.
-    val batch = registerCache(docs.filter(col("is_batch"))
-      .groupBy(col("digest")).agg(min(col("doc_id")).as("doc_id"))
-      .persist())
+    val batch = graft.SessionCache.getOrBuild(spark, "inc_dedup_batch", dir)(
+      docs.filter(col("is_batch"))
+        .groupBy(col("digest")).agg(min(col("doc_id")).as("doc_id"))
+        .persist())
     val hist = docs.filter(!col("is_batch")).select(col("digest"))
     // expected-items from parquet metadata (count on the bare scan is
     // footer-only — no data pass); overestimating only wastes bits
@@ -1301,25 +1212,19 @@ object DedupOps {
     * drift discipline): `dedup_spans` and the `text_pretrain_corpus`
     * capstone both consume it, and without the memo the capstone
     * re-paid the corpus-wide gram count + three window passes on every
-    * invocation (r11 judge flag: warm 3.4 s). Released with everything
-    * else by [[releaseShared]]. */
+    * invocation (r11 judge flag: warm 3.4 s). */
   def duplicatedSpans(spark: SparkSession, dir: String): DataFrame =
     spanCoverage(spark, dir).orderBy(col("doc_id"))
-
-  private val spanCache =
-    scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** Memoized, UNSORTED per-doc span-coverage table — capstone
     * consumers join on doc_id, so the registered face's global sort
     * stays out of the cache. */
   private[graft] def spanCoverage(spark: SparkSession, dir: String): DataFrame =
-    spanCache.synchronized {
-      spanCache.getOrElseUpdate(dir, graft.BuildTimers.timed("span_coverage") {
-        val t = registerCache(spanCoverageBuild(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        t.count()
-        t
-      })
+    graft.SessionCache.getOrBuild(spark, "span_coverage", dir) {
+      val t = spanCoverageBuild(spark, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
     }
 
   private def spanCoverageBuild(spark: SparkSession, dir: String): DataFrame = {

@@ -328,25 +328,13 @@ object MultimodalOps {
     * FACE. The decoded row is narrow (media_id + 6 metadata columns,
     * no payload), so the cache is media-count-sized regardless of
     * payload bytes; persisted MEMORY_AND_DISK + eagerly counted under
-    * the BuildTimers name `media_decode`; blocks released by the
-    * registerCache sweep in [[DedupOps.releaseShared]], references by
-    * [[clearMediaCache]]. */
-  private val mediaMetaCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearMediaCache(): Unit =
-    mediaMetaCache.synchronized(mediaMetaCache.clear())
-
+    * the build name `media_decode`. */
   private def decodedMeta(spark: SparkSession, dir: String): DataFrame =
-    mediaMetaCache.synchronized {
-      mediaMetaCache.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("media_decode") {
-          val t = DedupOps.registerCache(
-            decode(toMedia(spark, dir)).toDF()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          t.count()
-          t
-        })
+    graft.SessionCache.getOrBuild(spark, "media_decode", dir) {
+      val t = decode(toMedia(spark, dir)).toDF()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
     }
 
   /** Decoded metadata as a DataFrame — oracle-checkable: synthetic rows

@@ -421,8 +421,10 @@ object SimilarityOps {
   /** Trained-centroid memo: the full-probe and nProbe query faces share
     * one training run per (dir, k, iters) — training is deterministic,
     * so re-running it per query would only re-spend the Lloyd's jobs. */
-  private val centroidCache =
-    scala.collection.mutable.Map.empty[(String, Int, Int), Seq[(Int, Seq[Float])]]
+  private def centroids(emb: DataFrame, dir: String, nCentroids: Int,
+                        iters: Int): Seq[(Int, Seq[Float])] =
+    graft.SessionCache.getOrBuild(emb.sparkSession, "ivf_centroids",
+      (dir, nCentroids, iters))(trainCentroidsLocal(emb, nCentroids, iters))
 
   /** IVF-style ANN (inverted-file index): vectors are assigned to their
     * nearest centroid by a map-side literal-array argmax (no join, no
@@ -441,11 +443,7 @@ object SimilarityOps {
               nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .transform(FanOut(_))
-    val cents = centroidCache.synchronized {
-      centroidCache.getOrElseUpdate((dir, nCentroids, 2),
-        graft.BuildTimers.timed("ivf_centroids")(
-          trainCentroidsLocal(emb, nCentroids)))
-    }
+    val cents = centroids(emb, dir, nCentroids, 2)
     val assigned = emb.filter(col("vec_id") >= numQueries)
       .select(element_at(topCentroids(col("embedding"), cents, 1), 1).as("cid"),
         col("vec_id"), col("embedding"))
@@ -481,11 +479,7 @@ object SimilarityOps {
     // IDENTICAL centroid table the ivfTopK/fullprobe faces had already
     // trained (or vice versa) — one full training (persist + iters
     // corpus aggregates + collects) per session, not two.
-    val cents = centroidCache.synchronized {
-      centroidCache.getOrElseUpdate((dir, nCentroids, iters),
-        graft.BuildTimers.timed("ivf_centroids")(
-          trainCentroidsLocal(emb, nCentroids, iters)))
-    }
+    val cents = centroids(emb, dir, nCentroids, iters)
     import spark.implicits._
     cents.toDF("cid", "cvec")
       .select(col("cid").cast("int").as("cid"),
@@ -592,26 +586,6 @@ object SimilarityOps {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** Session-scoped artifact dirs for the registered served faces:
-    * build the persisted index/sketch once per (kind, corpus), serve
-    * every subsequent call from the artifact — the train-once /
-    * serve-many production shape, registered so the driver's oracle
-    * exercises the partition-pruned serving path, not just the inline
-    * one. */
-  private val servedArtifactCache =
-    scala.collection.mutable.Map.empty[(String, String), String]
-
-  private def servedDir(kind: String, dir: String)
-                       (build: String => Unit): String =
-    servedArtifactCache.synchronized {
-      servedArtifactCache.getOrElseUpdate((kind, dir),
-        graft.BuildTimers.timed(s"served_$kind") {
-          val d = java.nio.file.Files
-            .createTempDirectory(s"graft_${kind}_").toString
-          build(d); d
-        })
-    }
-
   /** `sim_ivf_served`: the PERSISTED IVF index on the serving path —
     * [[ivfBuildIndex]] once per session (full corpus, default
     * 16-centroid/2-iter training — the identical deterministic Lloyd's
@@ -624,7 +598,11 @@ object SimilarityOps {
   def ivfServedTopK(spark: SparkSession, dir: String,
                     numQueries: Int = 5, k: Int = 5,
                     nProbe: Int = 4): DataFrame = {
-    val idx = servedDir("ivfidx", dir)(d => ivfBuildIndex(spark, dir, d))
+    // built once per (session, corpus) and served from the artifact:
+    // the train-once / serve-many production shape, so the oracle
+    // exercises the partition-pruned serving path, not just the inline one
+    val idx = graft.SessionCache.tempDir(spark, "ivfidx", dir)(
+      d => ivfBuildIndex(spark, dir, d))
     val queries = Tables.embeddings(spark, dir).transform(FanOut(_))
       .filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -638,7 +616,8 @@ object SimilarityOps {
     * appears in that scan). Deterministic end to end and row-identical
     * to [[rpTopK]], so the `simRpTopKSql` oracle hash-checks it. */
   def rpServedTopK(spark: SparkSession, dir: String): DataFrame = {
-    val sk = servedDir("rpsketch", dir)(d => rpBuildSketch(spark, dir, d))
+    val sk = graft.SessionCache.tempDir(spark, "rpsketch", dir)(
+      d => rpBuildSketch(spark, dir, d))
     rpQuerySketch(spark, dir, sk)
   }
 
@@ -724,44 +703,7 @@ object SimilarityOps {
     * (`sim_near_dups`) and the cluster face (`sim_clusters`) — the
     * embedding-space analogue of the ngram pair cache: the LSH
     * bucketing + candidate join + exact-cosine verify runs once per
-    * (dir, params) session, both consumers read the persisted result.
-    * Cleared by [[DedupOps.releaseShared]]. */
-  private val nearDupCache =
-    scala.collection.mutable.Map.empty[(String, Double, Int, Int), DataFrame]
-
-  private[graft] def clearNearDupCache(): Unit = {
-    nearDupCache.synchronized(nearDupCache.clear())
-    bucketedCache.synchronized(bucketedCache.clear())
-    semanticLabelCache.synchronized(semanticLabelCache.clear())
-    int8GridCache.synchronized(int8GridCache.clear())
-    // served-index artifacts: drop the memo AND the temp dirs it
-    // created (one per (kind, dir) — they otherwise accumulate on
-    // disk for the JVM's lifetime). Deletion is per-entry
-    // failure-isolated and the map clears REGARDLESS: a half-deleted
-    // dir must never stay memoized (a later served query would read a
-    // truncated index), and one bad entry must not abort the rest of
-    // releaseShared.
-    servedArtifactCache.synchronized {
-      servedArtifactCache.values.foreach { d =>
-        try {
-          val root = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(root)) {
-            val walk = java.nio.file.Files.walk(root)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.iterator().asScala.toSeq
-                .sortBy(-_.getNameCount)
-                .foreach(p => java.nio.file.Files.deleteIfExists(p))
-            } finally walk.close()
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[graft] artifact cleanup of $d failed: $e")
-        }
-      }
-      servedArtifactCache.clear()
-    }
-  }
+    * (dir, params) session, both consumers read the persisted result. */
 
   /** The multi-table LSH bucketing block shared by the near-dup and
     * decontamination faces: one row per (vector, table) with the
@@ -769,53 +711,45 @@ object SimilarityOps {
     * (t · planesPerTable offset) must match the SQL oracles' LCG
     * replay — which is exactly why this exists ONCE. `extraCols` lets
     * the decontamination face carry `label` through. */
-  private val bucketedCache = scala.collection.mutable
-    .Map.empty[(String, Int, Int, Seq[String]), DataFrame]
-
   private def bucketedEmbeddings(spark: SparkSession, dir: String,
                                  planesPerTable: Int, nTables: Int,
                                  extraCols: Seq[String] = Nil): DataFrame =
-    bucketedCache.synchronized {
-      bucketedCache.getOrElseUpdate((dir, planesPerTable, nTables, extraCols),
-        graft.BuildTimers.timed("lsh_signatures") {
-          // the signature computation is planesPerTable·nTables 64-term
-          // higher-order folds per row — the dominant per-run cost of
-          // every LSH consumer, so it materializes ONCE per session (at
-          // 100 TB this is the persisted signature-index table the
-          // ivfBuildIndex discipline prescribes; released with the
-          // session caches)
-          val emb = Tables.embeddings(spark, dir)
-            .transform(FanOut(_))
-          val t = graft.ext.DedupOps.registerCache(
-            emb.select(col("vec_id") +: extraCols.map(col) :+ col("embedding") :+
-                posexplode(array((0 until nTables).map(t =>
-                  lshBucket(col("embedding"), planesPerTable, t * planesPerTable)): _*)): _*)
-              .withColumnRenamed("pos", "table")
-              .withColumnRenamed("col", "bucket")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          t.count()
-          t
-        })
+    graft.SessionCache.getOrBuild(spark, "lsh_signatures",
+        (dir, planesPerTable, nTables, extraCols)) {
+      // the signature computation is planesPerTable·nTables 64-term
+      // higher-order folds per row — the dominant per-run cost of
+      // every LSH consumer, so it materializes ONCE per session (at
+      // 100 TB this is the persisted signature-index table the
+      // ivfBuildIndex discipline prescribes)
+      val emb = Tables.embeddings(spark, dir)
+        .transform(FanOut(_))
+      val t = emb.select(col("vec_id") +: extraCols.map(col) :+ col("embedding") :+
+          posexplode(array((0 until nTables).map(t =>
+            lshBucket(col("embedding"), planesPerTable, t * planesPerTable)): _*)): _*)
+        .withColumnRenamed("pos", "table")
+        .withColumnRenamed("col", "bucket")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
     }
 
   private[graft] def nearDupPairs(spark: SparkSession, dir: String,
                                   threshold: Double, planesPerTable: Int,
                                   nTables: Int): DataFrame =
-    nearDupCache.synchronized {
-      nearDupCache.getOrElseUpdate((dir, threshold, planesPerTable, nTables), graft.BuildTimers.timed("near_dup_pairs") {
-        val tabled = bucketedEmbeddings(spark, dir, planesPerTable, nTables)
-        graft.ext.DedupOps.registerCache(tabled.as("a").join(tabled.as("b"),
-            col("a.table") === col("b.table") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            col("a.embedding").as("ea"), col("b.embedding").as("eb"))
-          .dropDuplicates("vec_a", "vec_b")
-          .select(col("vec_a"), col("vec_b"),
-            round(cosine(col("ea"), col("eb")), 6).as("cos"))
-          .filter(col("cos") >= threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })
+    graft.SessionCache.getOrBuild(spark, "near_dup_pairs",
+        (dir, threshold, planesPerTable, nTables)) {
+      val tabled = bucketedEmbeddings(spark, dir, planesPerTable, nTables)
+      tabled.as("a").join(tabled.as("b"),
+          col("a.table") === col("b.table") &&
+            col("a.bucket") === col("b.bucket") &&
+            col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+          col("a.embedding").as("ea"), col("b.embedding").as("eb"))
+        .dropDuplicates("vec_a", "vec_b")
+        .select(col("vec_a"), col("vec_b"),
+          round(cosine(col("ea"), col("eb")), 6).as("cos"))
+        .filter(col("cos") >= threshold)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def embeddingNearDups(spark: SparkSession, dir: String,
@@ -910,21 +844,15 @@ object SimilarityOps {
     * near-dup pair are absent (nothing to collapse). Scale: the pair
     * set is O(near-duplicates), orders of magnitude below the corpus,
     * so the loop runs on a table the size of the problem's answer. */
-  /** Converged semantic CC label memo (the clusterCache discipline):
+  /** Converged semantic CC label memo (as `dedup_cluster_labels`):
     * the loop is deterministic and localCheckpoint'ed, so one run per
     * (dir, threshold) session serves every consumer. */
-  private val semanticLabelCache =
-    scala.collection.mutable.Map.empty[(String, Double), DataFrame]
-
   def semanticClusters(spark: SparkSession, dir: String,
                        threshold: Double = 0.3): DataFrame =
-    semanticLabelCache.synchronized {
-      semanticLabelCache.getOrElseUpdate((dir, threshold),
-        graft.BuildTimers.timed("semantic_cc_labels")(
-          graft.ext.DedupOps.ccLabels(spark,
-            nearDupPairs(spark, dir, threshold, 6, 2)
-              .select(col("vec_a"), col("vec_b")))))
-    }
+    graft.SessionCache.getOrBuild(spark, "semantic_cc_labels", (dir, threshold))(
+      graft.ext.DedupOps.ccLabels(spark,
+        nearDupPairs(spark, dir, threshold, 6, 2)
+          .select(col("vec_a"), col("vec_b"))))
       .select(col("doc_id").as("vec_id"), col("label").as("cluster"),
         (col("doc_id") === col("label")).as("is_keeper"))
       .orderBy(col("vec_id"))
@@ -1022,11 +950,7 @@ object SimilarityOps {
     // Ranking order and rounding are IDENTICAL to ivfTopK's, so
     // per-budget results — and the face's hash — are unchanged.
     val emb = Tables.embeddings(spark, dir).transform(FanOut(_))
-    val cents = centroidCache.synchronized {
-      centroidCache.getOrElseUpdate((dir, nCentroids, 2),
-        graft.BuildTimers.timed("ivf_centroids")(
-          trainCentroidsLocal(emb, nCentroids)))
-    }
+    val cents = centroids(emb, dir, nCentroids, 2)
     val assigned = emb.filter(col("vec_id") >= numQueries)
       .select(element_at(topCentroids(col("embedding"), cents, 1), 1).as("cid"),
         col("vec_id"), col("embedding"))
@@ -1142,28 +1066,23 @@ object SimilarityOps {
   /** Per-dimension (min, max) grid over the corpus — bounded O(d)
     * driver state (the centroid-training discipline), shared by the
     * quantizer and the int8 SERVING path so both sides of the
-    * quantize→serve contract use one grid. Memoized per dir (the
-    * codebookCache discipline): the quantize, serve, and eval faces
+    * quantize→serve contract use one grid. Memoized per dir (as the
+    * PQ codebook is): the quantize, serve, and eval faces
     * all need it, and each recompute is a full corpus scan. */
-  private val int8GridCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Map[Int, (Double, Double)]]
-
   private[graft] def int8MinMax(spark: SparkSession, dir: String,
                                 emb: DataFrame): Map[Int, (Double, Double)] =
-    int8GridCache.synchronized {
-      int8GridCache.getOrElseUpdate((spark, dir), graft.BuildTimers.timed("int8_grid") {
-        val mm = emb
-          .select(posexplode(col("embedding")).as(Seq("i", "v")))
-          .groupBy(col("i"))
-          .agg(min(col("v").cast("double")).as("mn"),
-            max(col("v").cast("double")).as("mx"))
-          .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2))))
-          .toMap
-        require(mm.size == 64,
-          s"int8 grid needs a 64-dim corpus; min/max covered ${mm.size} dims " +
-            "(empty table or shorter embedding arrays)")
-        mm
-      })
+    graft.SessionCache.getOrBuild(spark, "int8_grid", dir) {
+      val mm = emb
+        .select(posexplode(col("embedding")).as(Seq("i", "v")))
+        .groupBy(col("i"))
+        .agg(min(col("v").cast("double")).as("mn"),
+          max(col("v").cast("double")).as("mx"))
+        .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2))))
+        .toMap
+      require(mm.size == 64,
+        s"int8 grid needs a 64-dim corpus; min/max covered ${mm.size} dims " +
+          "(empty table or shorter embedding arrays)")
+      mm
     }
 
   /** The encode map over `embedding` for a fixed grid: one narrow map
@@ -1377,9 +1296,6 @@ object SimilarityOps {
     } finally emb.unpersist(blocking = false)
   }
 
-  private val codebookCache = scala.collection.mutable.Map
-    .empty[(String, Int, Int, Int), Seq[Seq[Seq[Float]]]]
-
   /** Encode a vector as `m` small codes: per subspace, the id of its
     * nearest codebook centroid (the native argmax kernel — map-side,
     * no shuffle). 64 floats become 8 ints: the 32× compression that
@@ -1427,11 +1343,8 @@ object SimilarityOps {
     // an oversized codebook in the driver for the JVM lifetime
     val codebook =
       if (ksub > 1024) trainCodebook(emb, dim, m, ksub, iters)
-      else codebookCache.synchronized {
-        codebookCache.getOrElseUpdate((dir, m, ksub, iters),
-          graft.BuildTimers.timed("pq_codebook")(
-            trainCodebook(emb, dim, m, ksub, iters)))
-      }
+      else graft.SessionCache.getOrBuild(spark, "pq_codebook", (dir, m, ksub, iters))(
+        trainCodebook(emb, dim, m, ksub, iters))
     val encoded = emb.filter(col("vec_id") >= numQueries)
       .select(col("vec_id"), pqEncode(col("embedding"), codebook).as("codes"))
     val queries = emb.filter(col("vec_id") < numQueries)

@@ -141,10 +141,9 @@ object TextOps {
     * curation capstone reads quality twice (keep gate + keeper argmax),
     * and the table is 3 narrow columns — a classic materialize-once
     * feature table. Unsorted on purpose (consumers join/aggregate, so a
-    * global sort here is wasted work); registered with the shared dedup
-    * cache registry so Verify/Bench release it with everything else. */
+    * global sort here is wasted work). */
   private[graft] def qualityCached(spark: SparkSession, dir: String): DataFrame =
-    graft.ext.DedupOps.registerCache(
+    graft.SessionCache.getOrBuild(spark, "quality_scores", dir)(
       qualityScoreUnsorted(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -433,21 +432,16 @@ object TextOps {
     // single-corpus-scan property structural rather than relying on
     // AQE exchange reuse to collapse three identical tokenize subtrees
     // (the table is observed-|sources×vocab| rows, far below the
-    // corpus). MEMOIZED per dir (repeat invocations in one session
-    // must not stack duplicate persisted copies in the registry) and
-    // registered with the session cache registry so releaseShared()
-    // frees it — a bare per-call persist leaked in long sessions.
-    val bySrcTok = driftTokCache.synchronized {
-      driftTokCache.getOrElseUpdate((spark, dir), graft.BuildTimers.timed("drift_tokens") {
-        val toks = Tables.documents(spark, dir)
-          .transform(graft.ext.FanOut(_))
-          .select(col("source"), explode(tokens(col("text"))).as("tok"))
-          .filter(length(col("tok")) > 0)
-        graft.ext.DedupOps.registerCache(
-          toks.groupBy(col("source"), col("tok"))
-            .agg(count(lit(1)).as("obs"))
-            .persist())
-      })
+    // corpus). Memoized per (session, dir): a bare per-call persist
+    // leaked in long sessions.
+    val bySrcTok = graft.SessionCache.getOrBuild(spark, "drift_tokens", dir) {
+      val toks = Tables.documents(spark, dir)
+        .transform(graft.ext.FanOut(_))
+        .select(col("source"), explode(tokens(col("text"))).as("tok"))
+        .filter(length(col("tok")) > 0)
+      toks.groupBy(col("source"), col("tok"))
+        .agg(count(lit(1)).as("obs"))
+        .persist()
     }
     val byTok = bySrcTok.groupBy(col("tok"))
       .agg(sum(col("obs")).as("g"))
@@ -571,9 +565,7 @@ object TextOps {
     // (guide §5 "caching is worth it when a DataFrame is reused and
     // recomputation is expensive"): persist the token arrays once and
     // the exploded bigram stream once, so the corpus text is tokenized
-    // ONE time per session instead of four. Both caches ride the
-    // session registry (released by DedupOps.releaseShared with the
-    // dedup family's shingle tables — the same discipline). At 100 TB
+    // ONE time per session instead of four. At 100 TB
     // the bigram cache is corpus-sized and spills MEMORY_AND_DISK;
     // the r16 window-count rewrite stays rejected (it trades the saved
     // scans for corpus-sized sorts). The c_a-from-c_ab derivation,
@@ -581,18 +573,18 @@ object TextOps {
     // the economics changed — it re-sums the bigram-grain aggregate
     // instead of re-shuffling the stream, and the join tree scores on
     // the aggregate grain so the stream is exchanged once.
-    val toks = graft.ext.DedupOps.registerCache(
-      Tables.documents(spark, dir)
+    val (toks, bg) = graft.SessionCache.getOrBuild(spark, "lm_bigrams", dir) {
+      val toks = Tables.documents(spark, dir)
         .transform(graft.ext.FanOut(_))
         .select(col("doc_id"), tokens(col("text")).as("t"))
-        .persist())
-    val bg = graft.ext.DedupOps.registerCache(
-      toks.filter(size(col("t")) >= 2)
+        .persist()
+      (toks, toks.filter(size(col("t")) >= 2)
         .select(col("doc_id"),
           explode(expr("transform(sequence(1, size(t) - 1), " +
             "i -> struct(element_at(t, i) AS a, element_at(t, i + 1) AS b))")).as("p"))
         .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
         .persist())
+    }
     val vocab = toks.select(explode(col("t")).as("w"))
       .agg(count_distinct(col("w")).as("vocab"))
     val cab = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
@@ -638,22 +630,15 @@ object TextOps {
     * session, guide §5 — the dsirCounts discipline): the table is
     * vocab-sized but its builder is a tokenize corpus pass, and TWO
     * consumers (`text_bpe_pairs` and the BPE training chain's
-    * character split) each re-ran it. Unbilled like dsirCounts — the
-    * first toucher's cold absorbs the one pass. Blocks released by
-    * [[clearSessionState]]. */
-  private val wordCountsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
+    * character split) each re-ran it. */
   private def wordCounts(spark: SparkSession, dir: String): DataFrame =
-    wordCountsCache.synchronized {
-      wordCountsCache.getOrElseUpdate((spark, dir),
-        Tables.documents(spark, dir)
-          .transform(graft.ext.FanOut(_))
-          .select(explode(tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0 && !col("w").contains(BpeSep))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-          .localCheckpoint())
-    }
+    graft.SessionCache.getOrBuild(spark, "word_counts", dir)(
+      Tables.documents(spark, dir)
+        .transform(graft.ext.FanOut(_))
+        .select(explode(tokens(col("text"))).as("w"))
+        .filter(length(col("w")) > 0 && !col("w").contains(BpeSep))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .localCheckpoint())
 
   /** `text_bpe_pairs`: adjacent character-pair frequencies within words,
     * weighted by word frequency — the statistic the first BPE merge
@@ -693,48 +678,9 @@ object TextOps {
     * collect (count desc, then lexicographic — a total order), one
     * narrow rewrite map, localCheckpoint to keep lineage flat. Driver
     * state is O(rounds), the centroid-training discipline. */
-  /** Memoized per-(dir, rounds) training runs: three faces
-    * ([[bpeMerges]], [[bpeFertility]], [[bpeTokensPerDoc]]) share one
-    * chain — the lrTrain discipline. */
-  private val driftTokCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Drop this object's session-lifetime memos (BPE training chains,
-    * LR weights, drift token table). Called by
-    * [[graft.ext.DedupOps.releaseShared]] with the other session
-    * caches — without this the checkpointed stages pinned by the maps
-    * outlive every consumer in long sessions, and a corpus rewritten
-    * at the same path would be served stale trained state. */
-  private[graft] def clearSessionState(): Unit = {
-    bpeMemo.synchronized(bpeMemo.clear())
-    lrMemo.synchronized(lrMemo.clear())
-    driftTokCache.synchronized(driftTokCache.clear())
-    dsirCache.synchronized(dsirCache.clear())
-    // the two checkpointed dsir intermediates: release the blocks,
-    // don't just drop the references (a dropped localCheckpoint
-    // lingers until GC + ContextCleaner — the r18 ADVICE lesson)
-    dsirCountsCache.synchronized {
-      dsirCountsCache.values.foreach(unpersistCkQuietly)
-      dsirCountsCache.clear()
-    }
-    dsirPerDocCache.synchronized {
-      dsirPerDocCache.values.foreach(unpersistCkQuietly)
-      dsirPerDocCache.clear()
-    }
-    wordCountsCache.synchronized {
-      wordCountsCache.values.foreach(unpersistCkQuietly)
-      wordCountsCache.clear()
-    }
-  }
-
-  private def unpersistCkQuietly(df: DataFrame): Unit =
-    try org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpointed(df)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  private val bpeMemo = scala.collection.mutable.Map
-    .empty[String, (Seq[(Long, String, String, String, Long)], Seq[DataFrame])]
-
-  /** The training chain shared by the BPE faces: returns the learned
+  /** The training chain shared by the BPE faces ([[bpeMerges]],
+    * [[bpeFertility]], [[bpeTokensPerDoc]]; memoized per (session, dir,
+    * rounds)): returns the learned
     * merges and ALL (w, enc, freq) segmentation stages — stages(i) is
     * the table after i merges (stages.head is the character split,
     * stages.last the final segmentation). Each stage is already
@@ -742,11 +688,8 @@ object TextOps {
     * beyond what training materialized anyway. */
   private def bpeTrainChain(spark: SparkSession, dir: String, rounds: Int)
       : (Seq[(Long, String, String, String, Long)], Seq[DataFrame]) =
-    bpeMemo.synchronized {
-      bpeMemo.getOrElseUpdate(s"$dir#$rounds",
-        graft.BuildTimers.timed("bpe_train")(
-          bpeTrainChainUncached(spark, dir, rounds)))
-    }
+    graft.SessionCache.getOrBuild(spark, "bpe_train", (dir, rounds))(
+      bpeTrainChainUncached(spark, dir, rounds))
 
   private def bpeTrainChainUncached(spark: SparkSession, dir: String,
                                     rounds: Int)
@@ -1010,19 +953,13 @@ object TextOps {
     * and before the memo that pass re-executed for EVERY consumer —
     * ratios and their total (2×), the dense grid and its total (2×),
     * through both the batch dsir_scores build and the streaming
-    * served-model build. One pass per session now. Blocks released by
-    * [[clearSessionState]]. */
-  private val dsirCountsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
+    * served-model build. One pass per session now. */
   private def dsirCounts(spark: SparkSession, dir: String): DataFrame =
-    dsirCountsCache.synchronized {
-      dsirCountsCache.getOrElseUpdate((spark, dir),
-        dsirToks(spark, dir).groupBy(col("b")).agg(
-          sum(when(col("source") === dsirTargetSource, 1L).otherwise(0L)).as("cnt_t"),
-          sum(when(col("source") =!= dsirTargetSource, 1L).otherwise(0L)).as("cnt_r"))
-          .localCheckpoint())
-    }
+    graft.SessionCache.getOrBuild(spark, "dsir_counts", dir)(
+      dsirToks(spark, dir).groupBy(col("b")).agg(
+        sum(when(col("source") === dsirTargetSource, 1L).otherwise(0L)).as("cnt_t"),
+        sum(when(col("source") =!= dsirTargetSource, 1L).otherwise(0L)).as("cnt_r"))
+        .localCheckpoint())
 
   private def dsirRatioExpr: String =
     s"""((cnt_t + 1L) * (tot_r + $dsirBuckets) * 1000000L)
@@ -1065,42 +1002,30 @@ object TextOps {
     * but its builder is the second tokenize pass, and it feeds BOTH
     * the percentile threshold and the scored-table join (and the
     * served model's threshold) — unmemoized, dsirToks executed ~6×
-    * across one dsir_scores build. Blocks released by
-    * [[clearSessionState]]. */
-  private val dsirPerDocCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
+    * across one dsir_scores build. */
   private def dsirPerDoc(spark: SparkSession, dir: String): DataFrame =
-    dsirPerDocCache.synchronized {
-      dsirPerDocCache.getOrElseUpdate((spark, dir),
-        dsirToks(spark, dir)
-          .join(broadcast(dsirRatios(spark, dir)), Seq("b"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_tokens"), sum(col("ratio_micro")).as("w_sum"))
-          .withColumn("score_micro", expr("w_sum DIV n_tokens"))
-          .localCheckpoint())
-    }
+    graft.SessionCache.getOrBuild(spark, "dsir_per_doc", dir)(
+      dsirToks(spark, dir)
+        .join(broadcast(dsirRatios(spark, dir)), Seq("b"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_tokens"), sum(col("ratio_micro")).as("w_sum"))
+        .withColumn("score_micro", expr("w_sum DIV n_tokens"))
+        .localCheckpoint())
 
   /** Per-dir memo of the scored-and-gated table (the span/LR/BPE
     * discipline): THREE registered faces consume it (`text_dsir`,
     * `text_dsir_mix`, `samp_dsir`), and without the memo each re-paid
     * the token explode, the bucket counts, and the percentile.
-    * Released with the session caches via [[clearSessionState]]. */
-  private val dsirCache =
-    scala.collection.mutable.Map.empty[String, DataFrame]
-
-  /** Unsorted face for pipeline consumers ([[dsirMix]], the
+    *
+    * Unsorted face for pipeline consumers ([[dsirMix]], the
     * `samp_dsir` resampler) — they re-aggregate or re-range-partition,
     * so the registered face's global sort is wasted work there. */
   private[graft] def dsirScoresUnsorted(spark: SparkSession, dir: String): DataFrame =
-    dsirCache.synchronized {
-      dsirCache.getOrElseUpdate(dir, graft.BuildTimers.timed("dsir_scores") {
-        val t = graft.ext.DedupOps.registerCache(
-          dsirScoresBuild(spark, dir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        t.count()
-        t
-      })
+    graft.SessionCache.getOrBuild(spark, "dsir_scores", dir) {
+      val t = dsirScoresBuild(spark, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
     }
 
   private def dsirScoresBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -1159,9 +1084,8 @@ object TextOps {
     // Token arrays persisted once for the THREE consumers (bigram
     // counts, unigram counts, pair total) — r20, the lmScore/shingle
     // session-cache discipline: the whitespace-split kernel runs one
-    // corpus pass instead of three. Released by
-    // DedupOps.releaseShared.
-    val toks = graft.ext.DedupOps.registerCache(
+    // corpus pass instead of three.
+    val toks = graft.SessionCache.getOrBuild(spark, "colloc_tokens", dir)(
       FanOut(Tables.documents(spark, dir))
         .select(split(trim(col("text")), "\\s+").as("t"))
         .persist())
@@ -1303,11 +1227,6 @@ object TextOps {
     greatest(lit(0.0), least(lit(1.0), lit(0.5) + z / lit(4.0)))
   }
 
-  /** Memoized (weights, features) per dir — the two registered faces
-    * share one training run, the clusterLabels discipline. */
-  private val lrMemo =
-    scala.collection.mutable.Map.empty[String, (Array[Long], DataFrame)]
-
   /** Batch logistic-regression training INSIDE the engine — the
     * trained-quality-classifier component of a curation pipeline
     * (CCNet/fastText-style "looks like the reference corpus" filter),
@@ -1323,11 +1242,11 @@ object TextOps {
     * driver-side update replays DuckDB's round() via exact-value
     * BigDecimal HALF_UP. Scale: ONE corpus scan builds the feature
     * table (localCheckpoint'd); each round is one map-side-combinable
-    * aggregate; driver state is O(rounds × 4) longs. */
+    * aggregate; driver state is O(rounds × 4) longs. Memoized per
+    * (session, dir, rounds): the two registered faces share one run. */
   private[graft] def lrTrain(spark: SparkSession, dir: String,
-                             rounds: Int = lrRounds)
-      : (Array[Long], DataFrame) = lrMemo.synchronized {
-    lrMemo.getOrElseUpdate(s"$dir#$rounds", graft.BuildTimers.timed("lr_train") {
+                             rounds: Int = lrRounds): (Array[Long], DataFrame) =
+    graft.SessionCache.getOrBuild(spark, "lr_train", (dir, rounds)) {
       val feats = lrFeatures(spark, dir).localCheckpoint()
       var w = Array(0L, 0L, 0L, 0L)
       var r = 0
@@ -1350,8 +1269,7 @@ object TextOps {
         r += 1
       }
       (w, feats)
-    })
-  }
+    }
 
   /** `text_quality_lr`: per-document score under the trained filter. */
   def qualityLrScores(spark: SparkSession, dir: String): DataFrame = {

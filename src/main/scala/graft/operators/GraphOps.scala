@@ -33,8 +33,6 @@ object GraphOps {
   /** Memoized part co-occurrence graph per sf dir, shared by
     * [[triangleCount]] and [[kCorePeel]]: `edges` = undirected edges
     * (a, b), canonical a < b by id; `deg` = undirected vertex degrees.
-    * Both persisted and registered with the session cache registry
-    * (released by DedupOps.releaseShared, which also clears this map).
     *
     * Construction does per-order pair generation WITHOUT a self-join:
     * group lineitem by order (one exchange, map-side combine on
@@ -46,22 +44,18 @@ object GraphOps {
     * and its dedup exchange carry one primitive long per pair instead
     * of a struct, and dedup on a single long is the cheapest distinct
     * Spark can run. */
-  // All four memo maps key on (session, dir), not dir alone: a later
-  // session reusing the same dir (across test suites, or after
-  // spark.stop) must rebuild rather than receive cached plans bound to
-  // a dead session. Entries for dead sessions are cleared with the rest
-  // of the session caches by DedupOps.releaseShared.
-  private val coGraphCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  private[graft] def clearGraphCaches(): Unit = {
-    coGraphCaches.synchronized(coGraphCaches.clear())
-    orientedCaches.synchronized(orientedCaches.clear())
-    undCaches.synchronized(undCaches.clear())
-    wUndCaches.synchronized(wUndCaches.clear())
-    csrCaches.synchronized(csrCaches.clear())
-    clearPairSupport()
-  }
+  private[graft] def coGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    graft.SessionCache.getOrBuild(spark, "graph_cograph", dir) {
+      // edges = a PROJECTION over the cached support table — no second
+      // persist; every consumer's scan decodes the packed long from
+      // the wp cache in its own map stage (free next to any exchange)
+      val edges = pairSupport(spark, dir)
+        .select(expr("ab DIV 4294967296L").as("a"),
+          pmod(col("ab"), lit(4294967296L)).as("b"))
+      val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
+        .groupBy(col("v")).agg(count(lit(1)).as("deg")).persist()
+      (edges, deg)
+    }
 
   /** Driver-side packed CSR adjacency of an undirected long-id edge
     * list: `nodes` sorted unique ids, `off`/`adj` counting-sorted
@@ -125,37 +119,30 @@ object GraphOps {
     * build. ONE collect of the packed [[pairSupport]] table — (ab, n),
     * the same 16 B/edge the gates price — serves both the plain and
     * the weighted adjacency (w = 1 + 100 div n, the [[weightedUnd]]
-    * formula). Cleared with the rest of the graph caches. Callers must
-    * have passed the size gate. */
-  private val csrCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), WeightedCsr]
-
+    * formula). Callers must have passed the size gate. */
   private[graft] def graphWCsr(spark: SparkSession, dir: String): WeightedCsr =
-    csrCaches.synchronized {
-      csrCaches.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("graph_csr") {
-          val flat: Array[Long] = pairSupport(spark, dir)
-            .queryExecution.toRdd
-            .mapPartitions { it =>
-              val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-              it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
-              Iterator.single(buf.result())
-            }.collect().flatten
-          // unpack (ab, n) → (a, b, w) in place of a second collect
-          val m = flat.length / 2
-          val ea = new Array[Long](m)
-          val eb = new Array[Long](m)
-          val ew = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            val ab = flat(2 * i)
-            ea(i) = ab / 4294967296L
-            eb(i) = ab % 4294967296L
-            ew(i) = 1L + 100L / flat(2 * i + 1)
-            i += 1
-          }
-          buildWeightedCsr(ea, eb, ew)
-        })
+    graft.SessionCache.getOrBuild(spark, "graph_csr", dir) {
+      val flat: Array[Long] = pairSupport(spark, dir)
+        .queryExecution.toRdd
+        .mapPartitions { it =>
+          val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+          it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+          Iterator.single(buf.result())
+        }.collect().flatten
+      // unpack (ab, n) → (a, b, w) in place of a second collect
+      val m = flat.length / 2
+      val ea = new Array[Long](m)
+      val eb = new Array[Long](m)
+      val ew = new Array[Long](m)
+      var i = 0
+      while (i < m) {
+        val ab = flat(2 * i)
+        ea(i) = ab / 4294967296L
+        eb(i) = ab % 4294967296L
+        ew(i) = 1L + 100L / flat(2 * i + 1)
+        i += 1
+      }
+      buildWeightedCsr(ea, eb, ew)
     }
 
   private[graft] def graphCsr(spark: SparkSession, dir: String): GraphCsr =
@@ -275,22 +262,18 @@ object GraphOps {
     * [[labelPropagation]] and [[bfsHops]]: HashPartitioning(u)
     * satisfies every per-round aggregate keyed on u, so each round is
     * an exchange-free map stage over this one cache. */
-  private val undCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] def undGraph(spark: SparkSession, dir: String): DataFrame =
+    undirectedOf(coGraph(spark, dir)._1)
 
+  /** The doubled, u-partitioned edge list of an (a, b) edge frame,
+    * memoized per frame (the key is the frame itself, so the test faces'
+    * ad-hoc edge sets get their own entries). */
   private def undirectedOf(edges: DataFrame): DataFrame =
-    graft.ext.DedupOps.registerCache(
+    graft.SessionCache.getOrBuild(edges.sparkSession, "graph_undirected", edges)(
       edges.select(col("a").as("u"), col("b").as("v"))
         .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
         .repartition(col("u"))
         .persist())
-
-  private[graft] def undGraph(spark: SparkSession, dir: String): DataFrame =
-    undCaches.synchronized {
-      undCaches.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("graph_undirected")(
-          undirectedOf(coGraph(spark, dir)._1)))
-    }
 
   /** Memoized packed-pair SUPPORT table per (session, sf dir): one
     * explode of the basket pair stream and one groupBy(ab) aggregate
@@ -299,40 +282,15 @@ object GraphOps {
     * the distinct edges) and the support-weighted one. Building them
     * separately used to pay the pair explode + its dedup exchange
     * twice. */
-  private val pairSupportCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   private[graft] def pairSupport(spark: SparkSession, dir: String): DataFrame =
-    pairSupportCaches.synchronized {
-      pairSupportCaches.getOrElseUpdate((spark, dir), graft.BuildTimers.timed("graph_pair_support") {
-        val byOrder = baskets(spark, dir)
-        graft.ext.DedupOps.registerCache(byOrder.select(explode(
-            org.apache.spark.sql.graftbridge.ColumnBridge.column(
-              graft.functions.PackedPairs(
-                org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ps")))))
-            .as("ab"))
-          .groupBy(col("ab")).agg(count(lit(1)).as("n"))
-          .persist())
-      })
-    }
-
-  private[graft] def clearPairSupport(): Unit =
-    pairSupportCaches.synchronized(pairSupportCaches.clear())
-
-  private[graft] def coGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    coGraphCaches.synchronized {
-      coGraphCaches.getOrElseUpdate((spark, dir), graft.BuildTimers.timed("graph_cograph") {
-        // edges = a PROJECTION over the cached support table — no second
-        // persist; every consumer's scan decodes the packed long from
-        // the wp cache in its own map stage (free next to any exchange)
-        val edges = pairSupport(spark, dir)
-          .select(expr("ab DIV 4294967296L").as("a"),
-            pmod(col("ab"), lit(4294967296L)).as("b"))
-        val deg = graft.ext.DedupOps.registerCache(
-          edges.select(explode(array(col("a"), col("b"))).as("v"))
-            .groupBy(col("v")).agg(count(lit(1)).as("deg")).persist())
-        (edges, deg)
-      })
+    graft.SessionCache.getOrBuild(spark, "graph_pair_support", dir) {
+      baskets(spark, dir).select(explode(
+          org.apache.spark.sql.graftbridge.ColumnBridge.column(
+            graft.functions.PackedPairs(
+              org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ps")))))
+          .as("ab"))
+        .groupBy(col("ab")).agg(count(lit(1)).as("n"))
+        .persist()
     }
 
   /** Fixed-point PageRank (damping 0.85 as the rational 85/100). Node
@@ -343,12 +301,10 @@ object GraphOps {
       .distinct()
     val edges = pairs.select(col("s").as("src"), col("p").as("dst"))
       .unionByName(pairs.select(col("p").as("src"), col("s").as("dst")))
-    // the final plan reads these once per round — pin them for the run;
-    // released with the other session caches (DedupOps.releaseShared)
-    val withDeg = graft.ext.DedupOps.registerCache(edges.join(
-      edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src").persist())
-    val nodes = graft.ext.DedupOps.registerCache(
-      edges.select(col("src").as("node")).distinct().persist())
+    // the final plan reads these once per round — pin them
+    val (withDeg, nodes) = graft.SessionCache.getOrBuild(spark, "pagerank_edges", dir)(
+      (edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src").persist(),
+        edges.select(col("src").as("node")).distinct().persist()))
     val n = nodes.count()
     var ranks = nodes.select(col("node"), lit(SCALE / n).as("r"))
     for (_ <- 1 to iters) {
@@ -390,47 +346,42 @@ object GraphOps {
     * per-session work, not per-run work — without the memo every warm
     * run re-ran the count job (the cached data itself was already
     * deduped by Spark's CacheManager, but the job and the plan
-    * re-analysis were not). Cleared with the other graph caches. */
-  private val orientedCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), (DataFrame, Long)]
-
-  /** Oriented wedge-closing triangle count of an (a, b) edge set —
+    * re-analysis were not).
+    *
+    * Oriented wedge-closing triangle count of an (a, b) edge set —
     * the shared core of [[triangleCount]] and [[triangleEstimate]].
     * `variant` keys the session memo (the edge set must be a pure
     * function of (session, variant) — both callers' are). Returns a
     * 1-row frame (n_triangles). */
   private def orientedTriangles(edges: DataFrame, variant: String): DataFrame = {
     val spark = edges.sparkSession
-    val (oriented, edgeCount) = orientedCaches.synchronized {
-      orientedCaches.getOrElseUpdate((spark, variant),
-        graft.BuildTimers.timed(s"graph_oriented_$variant") {
-          // vertex-count-sized and read by both orientation joins — pin it
-          val deg = graft.ext.DedupOps.registerCache(
-            edges.select(explode(array(col("a"), col("b"))).as("v"))
-              .groupBy(col("v")).agg(count(lit(1)).as("deg")).persist())
-          // ord = deg·2^32 + id: a total order, low-degree vertices first
-          val withOrd = edges
-            .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-            .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-            .select(col("a"), col("b"),
-              (col("da") * lit(4294967296L) + col("a")).as("orda"),
-              (col("db") * lit(4294967296L) + col("b")).as("ordb"))
-          // partitioned by src AT BUILD TIME: the wedge self-join keys on
-          // src, so HashPartitioning(src) out of the cache makes every
-          // run's wedge join exchange-free (the old unpartitioned cache
-          // re-shuffled 2×|E| rows per run); at scale this is also the
-          // layout that co-locates the wedge join on a real cluster
-          val o = graft.ext.DedupOps.registerCache(withOrd.select(
-              when(col("orda") < col("ordb"), col("a")).otherwise(col("b")).as("src"),
-              when(col("orda") < col("ordb"), col("b")).otherwise(col("a")).as("dst"),
-              greatest(col("orda"), col("ordb")).as("dord"))
-            .repartition(col("src"))
-            .persist())
-          // the count materializes the pinned cache the wedge self-join
-          // reads twice and the probe reads once — and feeds the gate
-          (o, o.count())
-        })
-    }
+    val (oriented, edgeCount, _) =
+      graft.SessionCache.getOrBuild(spark, s"graph_oriented_$variant", variant) {
+        // vertex-count-sized and read by both orientation joins — pin it
+        val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
+          .groupBy(col("v")).agg(count(lit(1)).as("deg")).persist()
+        // ord = deg·2^32 + id: a total order, low-degree vertices first
+        val withOrd = edges
+          .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
+          .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
+          .select(col("a"), col("b"),
+            (col("da") * lit(4294967296L) + col("a")).as("orda"),
+            (col("db") * lit(4294967296L) + col("b")).as("ordb"))
+        // partitioned by src AT BUILD TIME: the wedge self-join keys on
+        // src, so HashPartitioning(src) out of the cache makes every
+        // run's wedge join exchange-free (the old unpartitioned cache
+        // re-shuffled 2×|E| rows per run); at scale this is also the
+        // layout that co-locates the wedge join on a real cluster
+        val o = withOrd.select(
+            when(col("orda") < col("ordb"), col("a")).otherwise(col("b")).as("src"),
+            when(col("orda") < col("ordb"), col("b")).otherwise(col("a")).as("dst"),
+            greatest(col("orda"), col("ordb")).as("dord"))
+          .repartition(col("src"))
+          .persist()
+        // the count materializes the pinned cache the wedge self-join
+        // reads twice and the probe reads once — and feeds the gate
+        (o, o.count(), deg)
+      }
     // Close wedges against a BROADCAST edge set: the wedge stream is
     // O(Σ out-deg²) — 34× the edge count on the sf0.1 graph — so it must
     // stay inside the map-side codegen pipeline, never on the wire.
@@ -1112,22 +1063,16 @@ object GraphOps {
     * strong ties are cheap and rare ties cost up to 101 — the
     * weighted sibling of [[undGraph]], same u-partitioned cache
     * discipline. */
-  private val wUndCaches =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   private[graft] def weightedUnd(spark: SparkSession, dir: String): DataFrame =
-    wUndCaches.synchronized {
-      wUndCaches.getOrElseUpdate((spark, dir), graft.BuildTimers.timed("graph_weighted_und") {
-        val wp = pairSupport(spark, dir)
-          .select(expr("ab DIV 4294967296L").as("a"),
-            pmod(col("ab"), lit(4294967296L)).as("b"),
-            (lit(1L) + expr("100 DIV n")).as("w"))
-        graft.ext.DedupOps.registerCache(
-          wp.select(col("a").as("u"), col("b").as("v"), col("w"))
-            .unionByName(wp.select(col("b").as("u"), col("a").as("v"), col("w")))
-            .repartition(col("u"))
-            .persist())
-      })
+    graft.SessionCache.getOrBuild(spark, "graph_weighted_und", dir) {
+      val wp = pairSupport(spark, dir)
+        .select(expr("ab DIV 4294967296L").as("a"),
+          pmod(col("ab"), lit(4294967296L)).as("b"),
+          (lit(1L) + expr("100 DIV n")).as("w"))
+      wp.select(col("a").as("u"), col("b").as("v"), col("w"))
+        .unionByName(wp.select(col("b").as("u"), col("a").as("v"), col("w")))
+        .repartition(col("u"))
+        .persist()
     }
 
   /** Weighted single-source-set shortest paths (`q_sssp`): min-cost

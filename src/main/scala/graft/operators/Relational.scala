@@ -26,31 +26,6 @@ import graft.model.Tables
   */
 object Relational {
 
-  /** Memoized parts-grain value table for [[importantParts]] (r19
-    * ADVICE): its localCheckpoint runs an eager Spark job at
-    * DataFrame-construction time, so repeated invocations in one
-    * session (bench loops) would each strand a fresh block set until
-    * ContextCleaner catches up. One build per (session, dir);
-    * checkpoint blocks released by
-    * [[graft.ext.DedupOps.releaseShared]] → [[clearRelationalCaches]]. */
-  private val partValueCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearRelationalCaches(): Unit = {
-    partValueCache.synchronized {
-      partValueCache.values.foreach { df =>
-        try org.apache.spark.sql.graftbridge.ColumnBridge
-          .unpersistCheckpointed(df)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      partValueCache.clear()
-    }
-    // reference drop only: the DataFrames themselves were registered
-    // with DedupOps.registerCache, whose sweep (already run by
-    // releaseShared before this hook) unpersists the blocks
-    suppPartCache.synchronized(suppPartCache.clear())
-  }
-
   /** (l_suppkey, l_partkey)-grain lineitem partials SHARED by
     * `q_dominant_supplier` and `q_supplier_diversity` (guide §5 — the
     * decontam-report discipline): both faces open with the identical
@@ -60,29 +35,19 @@ object Relational {
     * — one fact shuffle instead of two — and each face projects its
     * slice. The grain table is |distinct (supp, part)|-sized (orders
     * of magnitude under the fact at scale) and persists
-    * MEMORY_AND_DISK; eagerly counted under the BuildTimers name
-    * `supp_part_grain` so first touch is billed as a named build;
-    * blocks released by the registerCache sweep in
-    * [[graft.ext.DedupOps.releaseShared]], references dropped by
-    * [[clearRelationalCaches]]. */
-  private val suppPartCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
+    * MEMORY_AND_DISK; eagerly counted under the build name
+    * `supp_part_grain` so first touch is billed as a named build. */
   private def suppPartGrain(spark: SparkSession, dir: String): DataFrame =
-    suppPartCache.synchronized {
-      suppPartCache.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("supp_part_grain") {
-          val t = graft.ext.DedupOps.registerCache(
-            Tables.lineitem(spark, dir)
-              .groupBy(col("l_suppkey"), col("l_partkey"))
-              .agg(sum(col("l_quantity").cast("long")).as("supp_qty"),
-                count(lit(1)).as("n_items"),
-                sum(when(col("l_returnflag") === "R", 1L).otherwise(0L))
-                  .as("n_ret"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          t.count()
-          t
-        })
+    graft.SessionCache.getOrBuild(spark, "supp_part_grain", dir) {
+      val t = Tables.lineitem(spark, dir)
+        .groupBy(col("l_suppkey"), col("l_partkey"))
+        .agg(sum(col("l_quantity").cast("long")).as("supp_qty"),
+          count(lit(1)).as("n_items"),
+          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L))
+            .as("n_ret"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
     }
 
   /** Exact decimal sum surfaced as double (see class doc). */
@@ -1384,12 +1349,9 @@ object Relational {
     // `FROM pv` subqueries do. Memoized per (session, dir) — r19
     // ADVICE: the checkpoint is an eager Spark job at construction
     // time, and an unmemoized one leaves another block set to
-    // ContextCleaner on every invocation of a bench loop. Billed to
-    // BuildTimers, released by DedupOps.releaseShared.
-    val pvM = partValueCache.synchronized {
-      partValueCache.getOrElseUpdate((spark, dir),
-        graft.BuildTimers.timed("important_parts_pv")(pv.localCheckpoint()))
-    }
+    // ContextCleaner on every invocation of a bench loop.
+    val pvM = graft.SessionCache.getOrBuild(spark, "important_parts_pv", dir)(
+      pv.localCheckpoint())
     val avg = pvM.agg((sum(col("value_units")))
       .as("sum_units"), count(lit(1)).as("n_parts"))
     pvM.crossJoin(broadcast(avg))

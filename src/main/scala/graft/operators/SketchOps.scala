@@ -100,8 +100,9 @@ object SketchOps {
       .distinct()
       .withColumn("h", conv(substring(md5(concat(lit(kmvSeed + ":"),
         col("ck").cast("string"))), 1, 15), 16, 10).cast("long"))
-    val samples = graft.ext.DedupOps.registerCache(graft.plans.TopKPerGroup.topK(
-      o, Seq("y"), Seq(("h", true), ("ck", true)), k).persist())
+    val samples = graft.SessionCache.getOrBuild(spark, "kmv_samples", (dir, k))(
+      graft.plans.TopKPerGroup.topK(
+        o, Seq("y"), Seq(("h", true), ("ck", true)), k).persist())
     // h_(k) per set, and the union sketch's h_(k) from the merged
     // samples (same hash ⇒ merged bottom-k IS the union's bottom-k;
     // distinct first — a key present in both years must count once)

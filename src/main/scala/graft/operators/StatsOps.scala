@@ -149,43 +149,43 @@ object StatsOps {
     * explodes. */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vc = graft.ext.DedupOps.registerCache(
-      Tables.orders(spark, dir)
+    val (_, med, dv, mad) = graft.SessionCache.getOrBuild(spark, "mad_tables", dir) {
+      val vc = Tables.orders(spark, dir)
         .select(col("o_orderpriority").as("grp"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("c"))
         .groupBy(col("grp"), col("c"))
         .agg(count(lit(1)).as("cnt"))
-        .persist())
-    // Per-group row total n is IDENTICAL for the value pass and the
-    // deviation pass (sum of counts is invariant under |c - m| mapping),
-    // so compute it once off the cache and broadcast it — each median
-    // then needs exactly ONE window pass (the running sum), not a second
-    // whole-partition window for n. Threshold algebra: cum >= ceil(n/2)
-    // ⟺ 2·cum >= n, and cum >= floor(n/2)+1 ⟺ 2·cum >= n+1 (integers).
-    val tot = vc.groupBy(col("grp")).agg(sum(col("cnt")).as("n"))
-    def median2(counts: DataFrame, v: String): DataFrame = {
-      val wOrd = Window.partitionBy(col("grp")).orderBy(col(v))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      counts.join(broadcast(tot), "grp")
-        .withColumn("cum", sum(col("cnt")).over(wOrd))
-        .groupBy(col("grp"))
-        .agg(max(col("n")).as("n"),
-          (min(when(col("cum") * 2 >= col("n"), col(v)))
-            + min(when(col("cum") * 2 >= col("n") + 1, col(v))))
-            .as("m2"))
-    }
-    // med and mad are GROUP-COUNT-sized (5 rows) but each feeds TWO
-    // consumers (the next stage's broadcast + the final report join);
-    // unpersisted, each consumer re-runs the median's window pass over
-    // the cache. Persisting the 5-row results halves the window work.
-    val med = graft.ext.DedupOps.registerCache(median2(vc, "c").persist())
-    val dv = graft.ext.DedupOps.registerCache(
-      vc.join(broadcast(med.select(col("grp"), col("m2"))), "grp")
+        .persist()
+      // Per-group row total n is IDENTICAL for the value pass and the
+      // deviation pass (sum of counts is invariant under |c - m| mapping),
+      // so compute it once off the cache and broadcast it — each median
+      // then needs exactly ONE window pass (the running sum), not a second
+      // whole-partition window for n. Threshold algebra: cum >= ceil(n/2)
+      // ⟺ 2·cum >= n, and cum >= floor(n/2)+1 ⟺ 2·cum >= n+1 (integers).
+      val tot = vc.groupBy(col("grp")).agg(sum(col("cnt")).as("n"))
+      def median2(counts: DataFrame, v: String): DataFrame = {
+        val wOrd = Window.partitionBy(col("grp")).orderBy(col(v))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        counts.join(broadcast(tot), "grp")
+          .withColumn("cum", sum(col("cnt")).over(wOrd))
+          .groupBy(col("grp"))
+          .agg(max(col("n")).as("n"),
+            (min(when(col("cum") * 2 >= col("n"), col(v)))
+              + min(when(col("cum") * 2 >= col("n") + 1, col(v))))
+              .as("m2"))
+      }
+      // med and mad are GROUP-COUNT-sized (5 rows) but each feeds TWO
+      // consumers (the next stage's broadcast + the final report join);
+      // unpersisted, each consumer re-runs the median's window pass over
+      // the cache. Persisting the 5-row results halves the window work.
+      val med = median2(vc, "c").persist()
+      val dv = vc.join(broadcast(med.select(col("grp"), col("m2"))), "grp")
         .select(col("grp"), abs(col("c") * 2 - col("m2")).as("d"), col("cnt"))
         .groupBy(col("grp"), col("d")).agg(sum(col("cnt")).as("cnt"))
-        .persist())
-    val mad = graft.ext.DedupOps.registerCache(
-      median2(dv, "d").select(col("grp"), col("m2").as("mad4")).persist())
+        .persist()
+      val mad = median2(dv, "d").select(col("grp"), col("m2").as("mad4")).persist()
+      (vc, med, dv, mad)
+    }
     val out = dv.join(broadcast(mad), "grp")
       .groupBy(col("grp"))
       .agg(sum(when(col("d") * 2 > col("mad4") * 3, col("cnt"))

@@ -153,14 +153,10 @@ object CusumStream {
         // leave a torn manifest)
         ViewCommit.commitMeta(spark, viewDir,
           (Seq(s"$batchId", owner) ++ live).mkString("\n"))
-        // best-effort GC of unlisted segments (failure here is garbage,
-        // not corruption — the next batch's sweep collects it)
-        try fs.listStatus(vp).foreach { st =>
-          val n = st.getPath.getName
-          if ((n.startsWith("seg_") || n.startsWith("data_b")) &&
-            !live.contains(n))
-            fs.delete(st.getPath, true)
-        } catch { case scala.util.control.NonFatal(_) => () }
+        // the superseded version's merged counts are garbage now
+        graft.SessionCache.evict(spark, "cusum_daily", (viewDir, lastApplied))
+        ViewCommit.sweep(fs, vp)(n =>
+          !(n.startsWith("seg_") || n.startsWith("data_b")) || live.contains(n))
         // the delta is on disk now — release its checkpoint blocks
         // instead of leaving them to GC + ContextCleaner (r18 ADVICE)
         org.apache.spark.sql.graftbridge.ColumnBridge
@@ -203,12 +199,8 @@ object CusumStream {
           .write.mode("overwrite")
           .parquet(new Path(ap, pageName).toString)
         ViewCommit.commitMeta(spark, alertDir, s"$viewBatch\n$pageName")
-        // best-effort GC of superseded pages and pre-versioned loose
-        // files (garbage, not corruption, if it fails)
-        try afs.listStatus(ap).foreach { st =>
-          val n = st.getPath.getName
-          if (n != "_meta" && n != pageName) afs.delete(st.getPath, true)
-        } catch { case scala.util.control.NonFatal(_) => () }
+        // GC of superseded pages and pre-versioned loose files
+        ViewCommit.sweep(afs, ap)(n => n == "_meta" || n == pageName)
       }
     }
   }
@@ -246,45 +238,22 @@ object CusumStream {
       .start()
   }
 
-  /** Memo of the MATERIALIZED merged counts, keyed by (viewDir,
-    * committed batch id): the merge-on-read is tiny but its eager
-    * localCheckpoint is a scheduled job, and the served faces read an
-    * UNCHANGED view on every warm run — without the memo each read
-    * re-paid the materialization (measured: ev_cusum_served warm
-    * 0.22 → ~0.5 s). A new commit carries a new batch id, so it misses
-    * naturally and the stale version is dropped; cleared with the
-    * session caches (DedupOps.releaseShared → [[clearDailyCache]]).
-    * Eviction UNPERSISTS the superseded version's checkpoint (r18
-    * ADVICE), which assumes the view's single-writer protocol: the
-    * owning query is the only committer, so by the time a new version
-    * is read the previous version's readers have completed — a reader
-    * racing a commit across versions would need the old blocks the
-    * eviction just released. */
-  private val dailyCache =
-    scala.collection.mutable.Map.empty[(String, Long), DataFrame]
-
-  private def unpersistQuietly(df: DataFrame): Unit =
-    try org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpointed(df)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  private[graft] def clearDailyCache(): Unit =
-    dailyCache.synchronized {
-      // release the checkpoint blocks, don't just drop the references —
-      // a dropped localCheckpoint lingers until GC + ContextCleaner
-      // (r18 ADVICE)
-      dailyCache.values.foreach(unpersistQuietly)
-      dailyCache.clear()
-    }
-
   /** The committed counts: merge-on-read over the segments `_meta`
     * lists (readers must go through the meta so an uncommitted segment
     * is never visible). Counts are a monoid, so the groupBy-sum over
     * segments equals the eager merge — and over a single compacted (or
     * legacy merged) segment it is an identity grouping on unique keys.
-    * Returned MATERIALIZED (localCheckpoint, memoized per committed
-    * version): every consumer (cusumFromDaily's two branches, the
-    * seasonality regroup, the alert page) replans from a
-    * checkpoint-severed table instead of re-running the merge. */
+    * Returned MATERIALIZED (localCheckpoint, memoized per (session,
+    * viewDir, committed batch id)): every consumer (cusumFromDaily's
+    * two branches, the seasonality regroup, the alert page) replans
+    * from a checkpoint-severed table instead of re-running the merge,
+    * and the served faces read an UNCHANGED view on every warm run
+    * (measured: ev_cusum_served warm 0.22 → ~0.5 s without the memo).
+    * A new commit carries a new batch id, so it misses naturally;
+    * [[applyBatch]] evicts the superseded version in its session,
+    * which assumes the view's single-writer protocol: by the time a
+    * new version commits, the previous version's readers have
+    * completed. */
   def currentData(spark: SparkSession, viewDir: String): DataFrame = {
     val vp = new Path(viewDir)
     val fs = fsFor(vp, spark)
@@ -301,36 +270,12 @@ object CusumStream {
           s"$batchId but no live segment dir exists (expected seg_* " +
           s"listed on lines 3+ or a legacy data_b$batchId) — the data " +
           "was removed out-of-band; restore it or reset the view dir")
-    val key = (viewDir, batchId)
-    // double-checked insert: the eager localCheckpoint is a scheduled
-    // Spark job, so it must run OUTSIDE the lock — holding dailyCache
-    // while a job runs serializes every reader of every view (r18
-    // ADVICE). The race cost is a duplicate build whose loser is
-    // unpersisted immediately.
-    dailyCache.synchronized(dailyCache.get(key)).getOrElse {
-      val built = spark.read
+    graft.SessionCache.getOrBuild(spark, "cusum_daily", (viewDir, batchId))(
+      spark.read
         .parquet(dirs.map(s => new Path(viewDir, s).toString): _*)
         .groupBy(col("event_type"), col("day_num"))
         .agg(sum(col("n_events")).as("n_events"))
-        .localCheckpoint()
-      dailyCache.synchronized {
-        dailyCache.get(key) match {
-          case Some(winner) =>
-            unpersistQuietly(built) // lost the build race
-            winner
-          case None =>
-            // at most one live version per viewDir — a re-commit drops
-            // (and unpersists) the superseded entry instead of
-            // accreting checkpoints
-            dailyCache.keys
-              .filter { case (d, b) => d == viewDir && b != batchId }
-              .toSeq
-              .foreach(k => dailyCache.remove(k).foreach(unpersistQuietly))
-            dailyCache(key) = built
-            built
-        }
-      }
-    }
+        .localCheckpoint())
   }
 
   /** The full streamed statistic (not just flagged rows) from the
@@ -354,7 +299,7 @@ object CusumStream {
     * streamed-maintenance path inside the driver gate (the
     * `sim_ivf_served` discipline applied to the monitor). */
   private def servedViewBase(spark: SparkSession, dir: String): String =
-    ServedArtifacts.dir("cusumview", dir) { d =>
+    graft.SessionCache.tempDir(spark, "cusumview", dir) { d =>
       val ev = EventOps.events(spark, dir)
       (0 until 3).foreach { i =>
         applyBatch(

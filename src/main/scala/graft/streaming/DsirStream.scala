@@ -94,7 +94,8 @@ object DsirStream {
     * (projected to the served columns) hash-checks the artifact
     * round-trip inside the driver gate. */
   def servedScores(spark: SparkSession, dir: String): DataFrame = {
-    val art = ServedArtifacts.dir("dsirmodel", dir)(d => writeModel(spark, dir, d))
+    val art = graft.SessionCache.tempDir(spark, "dsirmodel", dir)(
+      d => writeModel(spark, dir, d))
     scoreStream(graft.model.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")), art)
       .orderBy(col("doc_id"))

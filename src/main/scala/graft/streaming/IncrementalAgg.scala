@@ -158,15 +158,9 @@ object IncrementalAgg {
         newVers.toSeq.sorted.map { case (b, v) => s"$b:$v" }).mkString("\n")
       ViewCommit.commitMeta(spark, viewDir, body)
       // best-effort GC of version dirs no manifest entry references
-      try {
-        val live = newVers.values.toSet
-        fs.listStatus(vp).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("data_b") &&
-              !live.contains(n.stripPrefix("data_b").toLong))
-            fs.delete(st.getPath, true)
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
+      val live = newVers.values.toSet
+      ViewCommit.sweep(fs, vp)(n =>
+        !n.startsWith("data_b") || live.contains(n.stripPrefix("data_b").toLong))
       // merged is on disk; release the checkpoint blocks instead of
       // leaving them to GC + ContextCleaner (r18 ADVICE parity)
       org.apache.spark.sql.graftbridge.ColumnBridge
@@ -226,7 +220,7 @@ object IncrementalAgg {
     * driver gate (the ev_cusum_served discipline for the view
     * maintainer). */
   def servedView(spark: SparkSession, dir: String): DataFrame = {
-    val base = ServedArtifacts.dir("aggview", dir) { d =>
+    val base = graft.SessionCache.tempDir(spark, "aggview", dir) { d =>
       val ev = graft.operators.EventOps.events(spark, dir)
         .select(col("ts"), col("event_type"), col("value"))
       (0 until 3).foreach { i =>

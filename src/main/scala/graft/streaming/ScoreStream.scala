@@ -60,7 +60,8 @@ object ScoreStream {
     * batch oracle (projected to the served columns) hash-checks the
     * artifact round-trip inside the driver gate. */
   def servedScores(spark: SparkSession, dir: String): DataFrame = {
-    val art = ServedArtifacts.dir("lrmodel", dir)(d => writeModel(spark, dir, d))
+    val art = graft.SessionCache.tempDir(spark, "lrmodel", dir)(
+      d => writeModel(spark, dir, d))
     scoreStream(graft.model.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")), art)
       .orderBy(col("doc_id"))

@@ -142,12 +142,8 @@ object SessionStream {
           (Seq(s"$batchId", owner) ++ live).mkString("\n"))
         // best-effort GC of unlisted segment/version dirs (crashed or
         // compacted-away — garbage, not corruption, if it fails)
-        try fs.listStatus(vp).foreach { st =>
-          val n = st.getPath.getName
-          if ((n.startsWith("seg_") || n.startsWith("data_b")) &&
-            !live.contains(n))
-            fs.delete(st.getPath, true)
-        } catch { case scala.util.control.NonFatal(_) => () }
+        ViewCommit.sweep(fs, vp)(n =>
+          !(n.startsWith("seg_") || n.startsWith("data_b")) || live.contains(n))
       } finally org.apache.spark.sql.graftbridge.ColumnBridge
         .unpersistCheckpointed(delta)
     }
@@ -241,7 +237,7 @@ object SessionStream {
     * DuckDB — putting the last un-oracled streaming path under the
     * same hash discipline as ev_view_served. */
   def servedSessions(spark: SparkSession, dir: String): DataFrame = {
-    val base = ServedArtifacts.dir("sessionview", dir) { d =>
+    val base = graft.SessionCache.tempDir(spark, "sessionview", dir) { d =>
       val ev = graft.operators.EventOps.events(spark, dir)
         .select(col("event_id").cast("long").as("event_id"),
           col("ts"), col("user_id").cast("long").as("user_id"),

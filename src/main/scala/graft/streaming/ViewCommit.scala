@@ -140,6 +140,22 @@ object ViewCommit {
     }
   }
 
+  /** Best-effort GC after a commit: delete every entry of `dir` whose
+    * name fails `keep`. A failure leaves garbage, not corruption (the
+    * next commit's sweep collects it), so it is logged once and the
+    * sweep returns false instead of throwing. */
+  def sweep(fs: FileSystem, dir: Path)(keep: String => Boolean): Boolean =
+    try {
+      fs.listStatus(dir).foreach { st =>
+        if (!keep(st.getPath.getName)) fs.delete(st.getPath, true)
+      }
+      true
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] sweep of $dir failed: $e")
+        false
+    }
+
   /** The view-owner identity for a checkpointed query: a UUID minted
     * ONCE into `<checkpointDir>/_graft_owner` when the checkpoint is
     * first used. Deleting + recreating the checkpoint (batch ids

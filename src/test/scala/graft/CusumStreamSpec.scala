@@ -336,10 +336,9 @@ class CusumStreamSpec extends SparkSuite {
     val (viewDir, alertDir) = (s"$base/view", s"$base/alerts")
     CusumStream.applyBatch(spark.createDataFrame(b0), 0L, viewDir,
       alertDir, "spec")
-    CusumStream.clearDailyCache()
-    // the double-checked insert runs its localCheckpoint OUTSIDE the
-    // lock (r18 ADVICE): N concurrent first readers must converge on
-    // ONE cached DataFrame (losers unpersist their duplicate builds)
+    graft.SessionCache.releaseAll()
+    // N concurrent first readers must converge on ONE cached DataFrame:
+    // one build, the others wait for it
     val readers = (0 until 4).map { _ =>
       val t = new java.util.concurrent.FutureTask(() =>
         CusumStream.currentData(spark, viewDir))
@@ -376,7 +375,7 @@ class CusumStreamSpec extends SparkSuite {
     fs.listStatus(new org.apache.hadoop.fs.Path(viewDir)).foreach { s =>
       if (s.getPath.getName.startsWith("seg_")) fs.delete(s.getPath, true)
     }
-    graft.streaming.CusumStream.clearDailyCache()
+    graft.SessionCache.releaseAll()
     val e = intercept[IllegalStateException] {
       CusumStream.readStatistic(spark, viewDir)
     }

@@ -180,4 +180,19 @@ class IncrementalAggSpec extends SparkSuite {
         viewDir, Seq("brand"), "price", owner = ckpt)
     }
   }
+
+  test("a view-dir sweep that fails logs once and returns normally") {
+    val missing = new Path(tmpDir("graft-sweep"), "no-such-view")
+    val fs = graft.streaming.ViewCommit.fsFor(missing, spark)
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val swept =
+      try graft.streaming.ViewCommit.sweep(fs, missing)(_ => false)
+      finally System.setErr(saved)
+    assert(!swept)
+    val lines = buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith(s"[graft] sweep of $missing failed: ")).toList
+    assert(lines.size == 1, buf.toString("UTF-8"))
+  }
 }

@@ -2,6 +2,10 @@
 # Round cadence (r18 judge #6): the checks every round must pass before
 # a certified bench window, as ONE failing script instead of a hand-run
 # checklist. Steps:
+#   0. session-cache lint: a memo map keyed by SparkSession or String, or
+#      a `def clear…Cache` hook, anywhere in src/main/scala outside
+#      SessionCache.scala fails the cadence (memoize through
+#      graft.SessionCache.getOrBuild instead)
 #   1. sbt Test/compile + full ScalaTest suite
 #   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
 #   3. PLAN_SNAPSHOT regeneration + diff_plans GATE (exit 2 on SUSPECT
@@ -20,6 +24,14 @@ cd "$(dirname "$0")/.."
 
 SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
+
+echo "=== cadence 0/4: session-cache lint ==="
+if grep -rlPz --include='*.scala' --exclude=SessionCache.scala \
+    '(mutable\.(Map|HashMap)|TrieMap|ConcurrentHashMap)\s*(\.empty)?\s*\[\s*\(?\s*(SparkSession|String)\b|def\s+clear\w*Cache' \
+    src/main/scala; then
+  echo "LINT FAILED: hand-rolled session memo above; use graft.SessionCache"
+  exit 1
+fi
 
 if [ "$SKIP_TESTS" = 0 ]; then
   echo "=== cadence 1/4: sbt test ==="
