@@ -32,15 +32,7 @@ object FuzzCp {
   def main(args: Array[String]): Unit = {
     val seed = args(0).toLong
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-fuzzcp")
     new java.io.File(outDir).mkdirs()
 
     val rng = new scala.util.Random(seed)

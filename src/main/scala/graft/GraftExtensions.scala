@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSelfSimilarityRule, CosineSimilarity, DotProduct, EditWithin1, Int8AdcDot, MinhashSignature, Simhash64, WordShingles}
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions as SQL functions. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or pass to
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * expressions as SQL functions. Every [[GraftSession]] applies it
+  * (once, also when `spark.sql.extensions` already names
+  * `graft.GraftExtensions`).
   *
   * The DataFrame API (`graft.ext.SimilarityOps`) does not require the
   * extension — it builds the expressions directly; this registration is

@@ -1,17 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: print formatted physical plans for the flagship queries so
   * scale-critical properties (broadcasts, top-k fusion, pushed filters,
   * partial aggregation) can be audited. Run:
   *   sbt "runMain graft.PlanAudit q5_revenue_by_nation ..." */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // pinned at 4 cores, not SPARK_GRAFT_CPUS: plan shapes (exchange
+    // partitioning, broadcast choices) stay comparable across machines
+    val spark = GraftSession.local("graft-plan-audit", cpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // iterative queries execute during CONSTRUCTION (driver-checked
     // convergence), so "explain" would run the whole computation and

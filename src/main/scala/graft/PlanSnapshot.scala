@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Plan-shape regression harness: one JSON line per registered query
@@ -18,12 +17,9 @@ import org.apache.spark.sql.execution.SparkPlan
   * (sorted keys, stable formatting — diff-friendly). */
 object PlanSnapshot {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // pinned at 4 cores, not SPARK_GRAFT_CPUS: plan shapes (exchange
+    // partitioning, broadcast choices) stay comparable across machines
+    val spark = GraftSession.local("graft-plan-snapshot", cpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT",
       "/root/repo/PLAN_SNAPSHOT.json")

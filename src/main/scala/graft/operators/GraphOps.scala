@@ -724,16 +724,8 @@ object GraphOps {
   // in-plan round's drop set embeds the whole maintained-table
   // recurrence — the logical tree (and the nested broadcast-build
   // re-execution) DOUBLES per fused round, so wider fusion trades one
-  // checkpoint barrier for exponentially more driver plan work. The
-  // env knob exists for attribution runs only.
-  // Try + validation: a malformed env value at object init would
-  // otherwise surface as ExceptionInInitializerError from every
-  // GraphOps entry point (r16 ADVICE) — fall back to the default.
-  val kCoreFuseWidth: Int =
-    sys.env.get("SPARK_GRAFT_KCORE_FUSE")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1)
-      .getOrElse(2)
+  // checkpoint barrier for exponentially more driver plan work.
+  val kCoreFuseWidth: Int = 2
 
   def kCorePeel(spark: SparkSession, dir: String,
       k: Int = kCoreK, rounds: Int = kCoreRounds): DataFrame = {
@@ -832,8 +824,7 @@ object GraphOps {
     // exit: a plan can't stop mid-flight, so a graph that converges
     // inside a fused window still pays its remaining in-plan probes
     // (empty drop sets — broadcast-pruned scans that match nothing);
-    // the exit still skips every barrier AFTER detection. Width is
-    // env-tunable (SPARK_GRAFT_KCORE_FUSE) for attribution runs.
+    // the exit still skips every barrier AFTER detection.
     val bcBudget = broadcastThresholdBytes(spark)
     // ADVICE r15: the drop set on early passes is every vertex below k
     // — potentially MOST of the graph, not bounded by the surviving
@@ -984,7 +975,6 @@ object GraphOps {
         .orderBy(col("round")), passesRun, barriers)
     }
     while (p <= rounds + 1 && !converged) {
-      val passT0 = System.nanoTime()
       val w = math.min(fuseWidth, rounds + 1 - p + 1) // passes this plan
       // the twin recurrences (see FUSED SUPERSTEPS above): `obs`
       // carries the per-pass observe nodes and feeds only forward;
@@ -1022,9 +1012,6 @@ object GraphOps {
       }
       // rows surviving into cp = #{deg ≥ k} measured one pass earlier
       tableRows = nCore(p + w - 3)
-      if (sys.env.contains("SPARK_GRAFT_KCORE_TRACE"))
-        System.err.println(f"[kcore] barrier at pass $p (+$w): " +
-          f"${(System.nanoTime() - passT0) / 1e9}%.3f s")
       degT = cp
       p += w
     }

@@ -66,16 +66,17 @@ object IngestStream {
   * production mapping of the reference's cronjob (the 60 s trigger IS
   * the schedule; the checkpoint volume is what makes a restarted driver
   * resume instead of reprocess). Args: bucket root, warehouse, streaming
-  * checkpoint dir, trigger seconds. The master comes from spark-submit
-  * (k8s:// in the manifest), never hardcoded here. */
+  * checkpoint dir, trigger seconds. The session comes from
+  * [[graft.GraftSession.submitted]]: the master and shuffle partitions
+  * come from spark-submit (k8s:// and 64 in the manifest), never
+  * hardcoded here, and the session time zone is UTC, so the metrics
+  * row's readable date does not depend on the driver JVM's default zone. */
 object IngestStreamMain {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: IngestStreamMain <bucket> <warehouse> <checkpoint> <triggerSeconds>")
     val Array(bucket, warehouse, checkpoint, trigSec) = args
-    val spark = SparkSession.builder()
-      .appName("graft-ingest")
-      .getOrCreate()
+    val spark = graft.GraftSession.submitted("graft-ingest")
     val q = IngestStream.start(spark, bucket, warehouse,
       pollInterval = s"${trigSec.toLong} seconds", checkpoint = checkpoint)
     q.awaitTermination()

@@ -211,7 +211,8 @@ object SessionStream {
     val maint = spark.newSession()
     // 4, was 8 (r19 optimization round): state-store cost per batch is
     // one checkpoint file per state partition, and the bounded replay
-    // is ~7 micro-batches — SessionViewProbe measured the full
+    // is ~7 micro-batches — SessionViewProbe (a probe main since
+    // removed; its source is in git history at f50dd88) measured the full
     // maintenance run at 8/4/2 partitions as 5.07/4.21/3.97 s
     // (steady-state), so 4 keeps real parallelism while shedding half
     // the state files; the committed view content is partition-count

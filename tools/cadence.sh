@@ -5,7 +5,10 @@
 #   0. session-cache lint: a memo map keyed by SparkSession or String, or
 #      a `def clear…Cache` hook, anywhere in src/main/scala outside
 #      SessionCache.scala fails the cadence (memoize through
-#      graft.SessionCache.getOrBuild instead)
+#      graft.SessionCache.getOrBuild instead); session-factory lint: a
+#      `SparkSession.builder` anywhere in src/main/scala or src/test/scala
+#      outside GraftSession.scala fails it too (build sessions through
+#      graft.GraftSession; perfbench/ builds its own and is out of scope)
 #   1. sbt Test/compile + full ScalaTest suite
 #   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
 #   3. PLAN_SNAPSHOT regeneration + diff_plans GATE (exit 2 on SUSPECT
@@ -25,11 +28,16 @@ cd "$(dirname "$0")/.."
 SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
 
-echo "=== cadence 0/4: session-cache lint ==="
+echo "=== cadence 0/4: session-cache + session-factory lint ==="
 if grep -rlPz --include='*.scala' --exclude=SessionCache.scala \
     '(mutable\.(Map|HashMap)|TrieMap|ConcurrentHashMap)\s*(\.empty)?\s*\[\s*\(?\s*(SparkSession|String)\b|def\s+clear\w*Cache' \
     src/main/scala; then
   echo "LINT FAILED: hand-rolled session memo above; use graft.SessionCache"
+  exit 1
+fi
+if grep -rn --include='*.scala' --exclude=GraftSession.scala \
+    'SparkSession\.builder' src/main/scala src/test/scala; then
+  echo "LINT FAILED: SparkSession.builder above; use graft.GraftSession"
   exit 1
 fi
 
