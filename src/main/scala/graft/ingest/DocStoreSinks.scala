@@ -157,14 +157,15 @@ object DocStoreSinks {
 
   /** Best-effort sweep of superseded generations after a commit —
     * garbage, not corruption, if it fails (the reader filters by
-    * generation), so ordinary IO errors are swallowed. NonFatal ONLY
-    * (r17 judge): an interrupt or VM error during the sweep must
-    * PROPAGATE, not vanish into a best-effort catch. The lister is
-    * injectable so a spec can prove both directions. */
+    * generation), so an ordinary IO error is logged once and the sweep
+    * returns false, as [[graft.streaming.ViewCommit.sweep]] does.
+    * NonFatal ONLY (r17 judge): an interrupt or VM error during the
+    * sweep must PROPAGATE, not vanish into a best-effort catch. The
+    * lister is injectable so a spec can prove both directions. */
   private[graft] def sweepSuperseded(
       coll: java.nio.file.Path, gen: Long,
       list: java.nio.file.Path => java.util.stream.Stream[java.nio.file.Path] =
-        java.nio.file.Files.list): Unit =
+        java.nio.file.Files.list): Boolean =
     try {
       val genSuffix = s".g$gen"
       val it = list(coll)
@@ -174,7 +175,12 @@ object DocStoreSinks {
           !n.contains(genSuffix + ".")
         if (isOld) java.nio.file.Files.deleteIfExists(p)
       } finally it.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+      true
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] sweep of $coll failed: $e")
+        false
+    }
 
   final class DocMetricsSink(spark: SparkSession, root: String)
       extends MetricsSink {

@@ -32,8 +32,8 @@ import graft.operators.{KubeOps, ListingOps, TimeOps}
   * control loop is a single node but the load runs on the cluster.
   * Each loop lists the bucket ONCE, as a driver-side key list: emptiness,
   * the manifest gate and the entity names are read off that list, and
-  * the oldest folder and its file set are the loop's only two control
-  * Spark actions. The listing is a recursive `listStatus` walk, not
+  * the oldest folder is the loop's one control Spark action. The
+  * listing is a recursive `listStatus` walk, not
   * `listFiles(root, true)`: it skips the per-file `LocatedFileStatus`
   * (block locations, and on the local FS a permission load per file).
   * On s3a the walk costs one LIST request per directory instead of one
@@ -190,16 +190,10 @@ object IngestPipeline {
     * production face is IngestStream's ProcessingTime trigger). */
   def pollForIngest(nextListing: () => DataFrame,
                     maxPolls: Int = 1000): (IngestParams, Int) =
-    pollUntil(maxPolls, "no valid ingest") { () =>
-      val listing = nextListing()
-      if (listing.isEmpty) None // ingestor.js:81 (empty bucket)
-      else {
-        val hasTs = ListingOps.hasTimestampFolders(listing)
-          .collect().headOption.exists(_.getBoolean(0))
-        if (!hasTs) None // ingestor.js:85 (no timestamped folders)
-        else oldestPending(listing) // :91–95 (None ⇒ invalid folders)
-      }
-    }
+    // oldestPending is None in all three wait states: an empty bucket
+    // (ingestor.js:81), no timestamped folders (:85) and timestamped
+    // folders with no marker file (:91–95)
+    pollUntil(maxPolls, "no valid ingest")(() => oldestPending(nextListing()))
 
   /** `waitForManifest` (ingestor.js:109–118) with an injectable
     * supplier: polls until `pending/<name>/manifest.json` appears,
@@ -401,8 +395,8 @@ object IngestPipeline {
       : Option[IngestMetrics] = {
     import spark.implicits._
     val bound = sinks.getOrElse(Sinks.parquet(spark, warehouse))
-    // one driver-side listing per loop; the only control-plane Spark
-    // actions are the oracle-checked oldestPendingIngest and ingestFiles
+    // one driver-side listing per loop; the one control-plane Spark
+    // action is the oracle-checked oldestPendingIngest
     val keys = bucketKeys(spark, bucket)
     if (keys.isEmpty) return None
     val listing = keys.toDF("key")
@@ -415,8 +409,6 @@ object IngestPipeline {
     if (!keys.contains(manifestKey(params.ingestName))) return None
 
     val times = new Times
-    times.ingestFiles = ListingOps.ingestFiles(listing, params.ingestName)
-      .collect().map(_.getString(0)).toSeq
     val startSec = clock()
     val entityNames = entities(keys, params.ingestName)
     runSinks(spark, bucket, warehouse, params, entityNames, times, clock,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,30 +24,13 @@ import graft.operators.EventOps
   *
   * Unlike IncrementalAgg's bucket-partitioned view, this view is NOT
   * bucketed: it is bounded by calendar × |types| (thousands of rows at
-  * any horizon). Commits are nevertheless SEGMENTED (r17 judge #2):
-  * each batch writes only its delta counts as an immutable
-  * `seg_b<id>` dir — O(delta) bytes per batch, not O(batches × view)
-  * — and readers merge-on-read (counts are a monoid, so a groupBy-sum
-  * over the listed segments equals the eager merge bit-for-bit). When
-  * the segment count passes `compactAfter` the commit folds them into
-  * one grouped `seg_c<id>`: the old full merge, amortized.
-  *
-  * Replay/restart safety (r12 advice, hardened r14): the view commits
-  * each batch by writing its delta segment and then ATOMICALLY
-  * renaming a `_meta` manifest
-  * carrying (owner token, batch id, live segment list) into place
-  * ([[ViewCommit.commitMeta]] — tmp write + rename-overwrite, so a
-  * crash at ANY point leaves either the previous manifest or the new
-  * one, never a torn file). A crash between the data write and the
-  * meta rename leaves `_meta` pointing at the previous version and the
-  * retried batch re-merges from THAT version: idempotent per batch,
-  * counts never double-merge. Batch ids are only monotone for the
-  * lifetime of one checkpointed query, so `maintain` REQUIRES a
-  * checkpoint location; the view's owner is a UUID token minted into
-  * that checkpoint directory ([[ViewCommit.ownerToken]]) — a different
-  * query, INCLUDING one whose checkpoint was deleted and recreated at
-  * the same path (ids restart at 0), fails loudly instead of silently
-  * dropping its first batches of genuinely new events.
+  * any horizon). Each batch commits only its delta counts as a segment
+  * and readers merge-on-read (counts are a monoid, so a groupBy-sum
+  * over the listed segments equals the eager merge bit-for-bit);
+  * compaction is the old full merge, amortized. The manifest, the
+  * replay and owner guard and the segment commit are
+  * [[ViewCommit]]'s; a committed manifest with no live segment is a
+  * diagnosable error here (see [[currentData]]).
   *
   * The alert sink is ScoreStream-style serving made ATOMIC (r18 judge
   * #5): the flagged (type, day) rows land in an immutable versioned
@@ -62,107 +45,34 @@ import graft.operators.EventOps
   */
 object CusumStream {
 
-  /** Resolve the filesystem FROM THE PATH'S SCHEME (not the default
-    * FS): viewDir may live on file:// while the default is hdfs:// or
-    * s3a:// — FileSystem.get(conf) would consult the wrong store. */
-  private def fsFor(p: Path, spark: SparkSession): FileSystem =
-    ViewCommit.fsFor(p, spark)
-
-  private def metaPath(viewDir: String) = ViewCommit.metaPath(viewDir)
-
   /** Segment count past which a commit folds the view into one grouped
     * segment (see SessionStream.defaultCompactAfter). */
   val defaultCompactAfter = 8
 
-  /** (owner token, last applied batch id, live segment dirs), if the
-    * view has ever committed. Lines 2+ list the segments; a
-    * pre-segment (two-line) manifest reads as an empty list and its
-    * single merged `data_b<id>` dir counts as one segment. A malformed
-    * manifest is a hard, diagnosable error
-    * ([[ViewCommit.metaParseError]]), never a bare parse crash. */
-  private def readMeta(fs: FileSystem,
-                       viewDir: String): Option[(String, Long, Seq[String])] =
-    ViewCommit.readMetaLines(fs, viewDir).map { lines =>
-      ViewCommit.parsed(viewDir, lines)(ls =>
-        (ls(1).trim, ls(0).trim.toLong,
-          ls.drop(2).map(_.trim).filter(_.nonEmpty)))
-    }
+  /** The view's merge: counts are a monoid, so a group-sum folds any
+    * set of count segments into one. */
+  private def sumCounts(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type"), col("day_num"))
+      .agg(sum(col("n_events")).as("n_events"))
 
-  private def liveSegments(fs: FileSystem, vp: Path, batchId: Long,
-                           segs: Seq[String]): Seq[String] =
-    if (segs.nonEmpty) segs
-    else if (batchId >= 0 && fs.exists(new Path(vp, s"data_b$batchId")))
-      Seq(s"data_b$batchId")
-    else Nil
-
-  /** Apply one micro-batch to the view: write the batch's daily-type
-    * counts as an immutable delta segment `seg_b<batchId>`, commit with
-    * one `_meta` write, then bring the alert page up to the committed
-    * version. An EMPTY delta (sparse stream trigger with no events)
-    * commits nothing at all — no segment, no manifest flip, no alert
-    * rewrite (r18 judge #4; same guard as SessionStream.applyBatch —
-    * safe because a replayed empty batch is a no-op either way).
-    * Public so a unit test can exercise the crash/replay matrix
-    * without a streaming harness. */
+  /** Apply one micro-batch to the view: commit the batch's daily-type
+    * counts as a delta segment ([[ViewCommit.appendSegment]], folded
+    * by [[sumCounts]] on compaction), then bring the alert page up to
+    * the committed version. An empty delta commits nothing and
+    * rewrites no alert page. Public so a unit test can exercise the
+    * crash/replay matrix without a streaming harness. */
   def applyBatch(batch: DataFrame, batchId: Long, viewDir: String,
                  alertDir: String, owner: String,
                  legacyOwner: Option[String] = None,
                  compactAfter: Int = defaultCompactAfter): Unit = {
     val spark = batch.sparkSession
-    val vp = new Path(viewDir)
-    val fs = fsFor(vp, spark)
-    val meta = readMeta(fs, viewDir)
-    // legacyOwner: a pre-token manifest stores the checkpoint PATH as
-    // owner — accepted once and migrated to the token IMMEDIATELY
-    // (a pure replay would never reach the data commit, leaving the
-    // acceptance window open)
-    meta.foreach { case (o, _, _) =>
-      if (ViewCommit.requireOwner(viewDir, o, owner, legacyOwner))
-        ViewCommit.migrateOwner(spark, viewDir, owner)
-    }
-    val lastApplied = meta.map(_._2).getOrElse(-1L)
-    if (batchId > lastApplied) {
-      val delta = EventOps.dailyTypeCounts(batch.toDF()).localCheckpoint()
-      if (delta.isEmpty) {
-        // nothing to merge: release the (empty) checkpoint blocks and
-        // leave view + page untouched
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .unpersistCheckpointed(delta)
-      } else {
-        val prevSegs = meta.map { case (_, b, segs) =>
-          liveSegments(fs, vp, b, segs) }.getOrElse(Nil)
-        val segName = s"seg_b$batchId"
-        delta.write.mode("overwrite")
-          .parquet(new Path(vp, segName).toString)
-        val appended = prevSegs :+ segName
-        val live =
-          if (appended.size > compactAfter) {
-            // compaction IS the old eager grouped merge, amortized to
-            // once per compactAfter batches
-            val cName = s"seg_c$batchId"
-            appended.map(s => spark.read.parquet(new Path(vp, s).toString))
-              .reduce(_ unionByName _)
-              .groupBy(col("event_type"), col("day_num"))
-              .agg(sum(col("n_events")).as("n_events"))
-              .write.mode("overwrite")
-              .parquet(new Path(vp, cName).toString)
-            Seq(cName)
-          } else appended
-        // the commit point: segment list + guard land in ONE atomic
-        // rename (tmp + rename-overwrite — a crash mid-write can never
-        // leave a torn manifest)
-        ViewCommit.commitMeta(spark, viewDir,
-          (Seq(s"$batchId", owner) ++ live).mkString("\n"))
-        // the superseded version's merged counts are garbage now
-        graft.SessionCache.evict(spark, "cusum_daily", (viewDir, lastApplied))
-        ViewCommit.sweep(fs, vp)(n =>
-          !(n.startsWith("seg_") || n.startsWith("data_b")) || live.contains(n))
-        // the delta is on disk now — release its checkpoint blocks
-        // instead of leaving them to GC + ContextCleaner (r18 ADVICE)
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .unpersistCheckpointed(delta)
-      }
-    }
+    val prev = ViewCommit.guard(spark, viewDir, owner, legacyOwner)
+    val lastApplied = prev.fold(-1L)(_.batchId)
+    if (batchId > lastApplied &&
+        ViewCommit.appendSegment(spark, viewDir, prev, batchId, owner,
+          EventOps.dailyTypeCounts(batch.toDF()), compactAfter)(sumCounts))
+      // the superseded version's merged counts are garbage now
+      graft.SessionCache.evict(spark, "cusum_daily", (viewDir, lastApplied))
     // Alert page AFTER the commit point, derived from the COMMITTED
     // view and published atomically at the view's version (r18 judge
     // #4/#5): a crash between the view commit and the page commit
@@ -185,10 +95,9 @@ object CusumStream {
     * upgrades in place on the next commit, its loose files swept. */
   private def serveAlerts(spark: SparkSession, viewDir: String,
                           alertDir: String): Unit = {
-    val fs = fsFor(new Path(viewDir), spark)
-    readMeta(fs, viewDir).foreach { case (_, viewBatch, _) =>
+    ViewCommit.Manifest.read(spark, viewDir).map(_.batchId).foreach { viewBatch =>
       val ap = new Path(alertDir)
-      val afs = fsFor(ap, spark)
+      val afs = ViewCommit.fsFor(ap, spark)
       val served = ViewCommit.readMetaLines(afs, alertDir)
         .map(lines => ViewCommit.parsed(alertDir, lines)(_.head.trim.toLong))
         .getOrElse(-1L)
@@ -210,8 +119,7 @@ object CusumStream {
     * manifest yet) falls back to reading the bare dir, keeping old
     * artifacts readable until their next commit upgrades them. */
   def currentAlerts(spark: SparkSession, alertDir: String): DataFrame = {
-    val ap = new Path(alertDir)
-    val afs = fsFor(ap, spark)
+    val afs = ViewCommit.fsFor(new Path(alertDir), spark)
     ViewCommit.readMetaLines(afs, alertDir) match {
       case Some(lines) =>
         val page = ViewCommit.parsed(alertDir, lines)(_(1).trim)
@@ -221,22 +129,15 @@ object CusumStream {
   }
 
   /** Maintain the daily-count view from `events` (needs `ts` and
-    * `event_type` columns) and keep the alert page fresh. The
-    * checkpoint is REQUIRED: it is what keeps batch ids monotone for
-    * the view's lifetime, and it names the view's owner. */
+    * `event_type` columns) and keep the alert page fresh, through
+    * [[ViewCommit.maintain]] (the checkpoint is required). */
   def maintain(events: DataFrame, viewDir: String, alertDir: String,
                checkpointDir: String,
-               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val owner = ViewCommit.ownerToken(events.sparkSession, checkpointDir)
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBatch(batch.toDF(), batchId, viewDir, alertDir, owner,
-          legacyOwner = Some(checkpointDir))
-      }
-      .trigger(trigger)
-      .start()
-  }
+               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ViewCommit.maintain(events, checkpointDir, trigger) { (batch, batchId, owner) =>
+      applyBatch(batch, batchId, viewDir, alertDir, owner,
+        legacyOwner = Some(checkpointDir))
+    }
 
   /** The committed counts: merge-on-read over the segments `_meta`
     * lists (readers must go through the meta so an uncommitted segment
@@ -255,27 +156,20 @@ object CusumStream {
     * new version commits, the previous version's readers have
     * completed. */
   def currentData(spark: SparkSession, viewDir: String): DataFrame = {
-    val vp = new Path(viewDir)
-    val fs = fsFor(vp, spark)
-    val (_, batchId, segs) = readMeta(fs, viewDir).getOrElse(
+    val (batchId, dirs) = ViewCommit.segments(spark, viewDir).getOrElse(
       throw new IllegalStateException(s"view $viewDir has no committed batch"))
-    val dirs = liveSegments(fs, vp, batchId, segs)
     // a committed manifest whose data dir vanished out-of-band (manual
     // cleanup of a legacy data_b dir) must fail diagnosably, not as
     // parquet's opaque "unable to infer schema" over zero paths (r18
     // ADVICE)
     if (dirs.isEmpty)
       throw new IllegalStateException(
-        s"view $viewDir: manifest ${metaPath(viewDir)} commits batch " +
+        s"view $viewDir: manifest ${ViewCommit.metaPath(viewDir)} commits batch " +
           s"$batchId but no live segment dir exists (expected seg_* " +
           s"listed on lines 3+ or a legacy data_b$batchId) — the data " +
           "was removed out-of-band; restore it or reset the view dir")
     graft.SessionCache.getOrBuild(spark, "cusum_daily", (viewDir, batchId))(
-      spark.read
-        .parquet(dirs.map(s => new Path(viewDir, s).toString): _*)
-        .groupBy(col("event_type"), col("day_num"))
-        .agg(sum(col("n_events")).as("n_events"))
-        .localCheckpoint())
+      sumCounts(spark.read.parquet(dirs: _*)).localCheckpoint())
   }
 
   /** The full streamed statistic (not just flagged rows) from the

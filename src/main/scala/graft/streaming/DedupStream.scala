@@ -44,9 +44,8 @@ object DedupStream {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
         val store = new org.apache.hadoop.fs.Path(storeDir)
+        val fs = ViewCommit.fsFor(store, spark)
         val cols = batch.columns
         // one row per digest within the batch: keeper = min doc_id (the
         // same argmin `incrementalDedup` applies in-batch)

@@ -137,9 +137,8 @@ object EventStream {
       .outputMode("update")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
         val target = new org.apache.hadoop.fs.Path(targetDir)
+        val fs = ViewCommit.fsFor(target, spark)
         val compacted = graft.operators.ChangeOps
           .latestByKey(batch.toDF(), keyCols, orderCols)
         val merged =

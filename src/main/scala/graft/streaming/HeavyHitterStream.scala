@@ -88,8 +88,7 @@ object HeavyHitterStream {
     * union IS the global Misra-Gries candidate table. */
   def candidates(spark: SparkSession, snapshotDir: String): DataFrame = {
     val logPath = new org.apache.hadoop.fs.Path(s"$snapshotDir/log")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = ViewCommit.fsFor(logPath, spark)
     if (!fs.exists(logPath)) {
       // no batch has committed a snapshot yet — an empty summary, not
       // an AnalysisException
@@ -101,8 +100,9 @@ object HeavyHitterStream {
       // a crash between the foreachBatch append and the checkpoint
       // commit replays the batch from the same state version, appending
       // an IDENTICAL snapshot — drop the replay copies (the same
-      // idempotence concern IncrementalAgg solves with _last_batch;
-      // here the replayed rows are bit-equal, so a distinct suffices)
+      // idempotence concern IncrementalAgg solves with the batch id its
+      // `_meta` manifest commits; here the replayed rows are bit-equal,
+      // so a distinct suffices)
       .dropDuplicates("bucket", "batch_id", "user_id")
     val latest = log.groupBy(col("bucket"))
       .agg(max(col("batch_id")).as("batch_id"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,24 +25,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * this a VIEW MAINTENANCE strategy rather than a recompute
   * (IncrementalAggSpec pins it by file mtimes).
   *
-  * Commit protocol (r13 — the CusumStream discipline, extended to a
-  * partitioned view; hardened r14): the manifest file `_meta` carries
-  * (owner token, last batch id, bucket → version) and is the SINGLE
-  * commit point, installed by an ATOMIC tmp-write + rename-overwrite
-  * ([[ViewCommit.commitMeta]]) so a crash at any point leaves either
-  * the previous manifest or the new one, never a torn file. A batch
-  * writes its merged touched buckets under `data_b<batchId>/bucket=<b>/`
-  * and then renames the manifest; a crash between the two leaves the
-  * manifest pointing at the previous versions, so the retried batch
-  * re-merges from THOSE — idempotent per batch, partials never
-  * double-merge. Batch ids are only monotone for one checkpointed
-  * query, so `maintainView` REQUIRES a checkpoint location; the view's
-  * owner is a UUID token minted into that checkpoint directory
-  * ([[ViewCommit.ownerToken]]) — a different query, INCLUDING one
-  * whose checkpoint was deleted and recreated at the same path (ids
-  * restart at 0), fails loudly instead of silently skipping its first
-  * batches. Superseded version dirs are GC'd best-effort after commit
-  * (failure leaves garbage, not corruption). */
+  * Commit protocol: [[ViewCommit]]'s manifest, guard and commit
+  * steps, with `bucket:version` manifest entries instead of segments —
+  * a batch writes its merged touched buckets under
+  * `data_b<batchId>/bucket=<b>/`, then commits the manifest that
+  * points those buckets at the new version, then sweeps the version
+  * dirs no entry references. */
 object IncrementalAgg {
 
   val nBuckets = 32
@@ -64,24 +52,6 @@ object IncrementalAgg {
     a.unionByName(b)
       .groupBy((col("bucket") +: keys.map(col)): _*)
       .agg(sum(col("sum_cents")).as("sum_cents"), sum(col("n_rows")).as("n_rows"))
-
-  private def fsFor(p: Path, spark: SparkSession): FileSystem =
-    ViewCommit.fsFor(p, spark)
-
-  /** Manifest: (owner token, last batch id, bucket → version). Format:
-    * line 1 = batchId, line 2 = owner, then `bucket:version` lines.
-    * A malformed manifest is a hard, diagnosable error
-    * ([[ViewCommit.metaParseError]]), never a bare parse crash. */
-  private def readMeta(fs: FileSystem, viewDir: String)
-      : Option[(String, Long, Map[Long, Long])] =
-    ViewCommit.readMetaLines(fs, viewDir).map { lines =>
-      ViewCommit.parsed(viewDir, lines) { ls =>
-        val vers = ls.drop(2).filter(_.contains(":")).map { l =>
-          val Array(b, v) = l.split(":", 2); b.trim.toLong -> v.trim.toLong
-        }.toMap
-        (ls(1).trim, ls(0).trim.toLong, vers)
-      }
-    }
 
   /** Committed view slices for a (bucket → version) assignment as ONE
     * DataFrame: one pruned parquet scan PER VERSION DIR — the bucket
@@ -111,19 +81,9 @@ object IncrementalAgg {
                  legacyOwner: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val vp = new Path(viewDir)
-    val fs = fsFor(vp, spark)
-    val meta = readMeta(fs, viewDir)
-    // legacyOwner: a pre-token manifest stores the checkpoint PATH as
-    // owner — accepted once and migrated to the token IMMEDIATELY
-    // (a pure replay would never reach the data commit, leaving the
-    // acceptance window open)
-    meta.foreach { case (o, _, _) =>
-      if (ViewCommit.requireOwner(viewDir, o, owner, legacyOwner))
-        ViewCommit.migrateOwner(spark, viewDir, owner)
-    }
-    val lastApplied = meta.map(_._2).getOrElse(-1L)
-    if (batchId > lastApplied) {
-      val versions = meta.map(_._3).getOrElse(Map.empty[Long, Long])
+    val prev = ViewCommit.guard(spark, viewDir, owner, legacyOwner)
+    if (batchId > prev.fold(-1L)(_.batchId)) {
+      val vers = prev.fold(Map.empty[Long, Long])(ViewCommit.bucketVersions(viewDir, _))
       val delta = partials(batch.toDF(), keys, valueCol).localCheckpoint()
       val touched = delta.select(col("bucket")).distinct()
         .collect().map(_.getLong(0)).sorted
@@ -137,7 +97,7 @@ object IncrementalAgg {
           .unpersistCheckpointed(delta)
         return
       }
-      val oldBv = touched.toSeq.flatMap(b => versions.get(b).map(b -> _))
+      val oldBv = touched.toSeq.flatMap(b => vers.get(b).map(b -> _))
       val merged =
         if (oldBv.isEmpty) delta
         else merge(bucketSlices(spark, viewDir, oldBv), delta, keys)
@@ -150,16 +110,10 @@ object IncrementalAgg {
       merged.repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(new Path(vp, s"data_b$batchId").toString)
-      // the commit point: guard + per-bucket versions in ONE atomic
-      // rename (tmp + rename-overwrite — a crash mid-write can never
-      // leave a torn manifest)
-      val newVers = versions ++ touched.map(_ -> batchId)
-      val body = (s"$batchId\n$owner" +:
-        newVers.toSeq.sorted.map { case (b, v) => s"$b:$v" }).mkString("\n")
-      ViewCommit.commitMeta(spark, viewDir, body)
-      // best-effort GC of version dirs no manifest entry references
+      val newVers = vers ++ touched.map(_ -> batchId)
+      ViewCommit.bucketManifest(batchId, owner, newVers).commit(spark, viewDir)
       val live = newVers.values.toSet
-      ViewCommit.sweep(fs, vp)(n =>
+      ViewCommit.sweep(ViewCommit.fsFor(vp, spark), vp)(n =>
         !n.startsWith("data_b") || live.contains(n.stripPrefix("data_b").toLong))
       // merged is on disk; release the checkpoint blocks instead of
       // leaving them to GC + ContextCleaner (r18 ADVICE parity)
@@ -173,31 +127,23 @@ object IncrementalAgg {
 
   /** Start maintaining the view at `viewDir` from `facts`. The view
     * schema is (bucket, keys..., sum_cents, n_rows), bucket-versioned
-    * per the commit protocol above. The checkpoint is REQUIRED — it
-    * keeps batch ids monotone and names the view's owner. */
+    * per the commit protocol above, through [[ViewCommit.maintain]]
+    * (the checkpoint is required). */
   def maintainView(facts: DataFrame, viewDir: String, keys: Seq[String],
                    valueCol: String, checkpointDir: String,
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val owner = ViewCommit.ownerToken(facts.sparkSession, checkpointDir)
-    facts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBatch(batch.toDF(), batchId, viewDir, keys, valueCol, owner,
-          legacyOwner = Some(checkpointDir))
-      }
-      .trigger(trigger)
-      .start()
-  }
+                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ViewCommit.maintain(facts, checkpointDir, trigger) { (batch, batchId, owner) =>
+      applyBatch(batch, batchId, viewDir, keys, valueCol, owner,
+        legacyOwner = Some(checkpointDir))
+    }
 
   /** The committed view contents: every bucket at the version its
     * manifest entry points to — an uncommitted version is never
     * visible. */
   def currentView(spark: SparkSession, viewDir: String): DataFrame = {
-    val fs = fsFor(new Path(viewDir), spark)
-    val (_, _, versions) = readMeta(fs, viewDir).getOrElse(
+    val m = ViewCommit.Manifest.read(spark, viewDir).getOrElse(
       throw new IllegalStateException(s"view $viewDir has no committed batch"))
-    bucketSlices(spark, viewDir, versions.toSeq.sorted)
+    bucketSlices(spark, viewDir, ViewCommit.bucketVersions(viewDir, m).toSeq.sorted)
   }
 
   /** Read the maintained view back as presentation rows (keys, total,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,17 +20,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    gaps-and-islands replay in any engine.
   *  - Append-only SEGMENT commit (r17 judge #2): finalized sessions
   *    never change (the watermark passed their close), so each
-  *    non-empty micro-batch writes ONLY ITS DELTA as an immutable
-  *    segment dir `seg_b<id>` and flips `_meta`, whose lines 2+ list
-  *    the live segments — O(delta) bytes per batch instead of the
-  *    O(batches × view) write amplification of a `prev ∪ delta` full
-  *    rewrite. When the listed-segment count passes `compactAfter`
-  *    the commit folds them into one `seg_c<id>` — a bounded rewrite
-  *    every compactAfter batches, the manifest-of-immutable-segments
-  *    shape (reference analogue: the metrics sink APPENDS per-ingest
-  *    documents, ingestor.js:328–342 — it never rewrites history).
-  *    Readers go through `_meta`; a crashed segment is invisible
-  *    (cp_docstore_roundtrip's invariant).
+  *    non-empty micro-batch commits ONLY ITS DELTA as a segment through
+  *    [[ViewCommit.appendSegment]] (identity compaction) — O(delta)
+  *    bytes per batch instead of a `prev ∪ delta` full rewrite
+  *    (reference analogue: the metrics sink APPENDS per-ingest
+  *    documents, ingestor.js:328–342 — it never rewrites history). The
+  *    manifest, the guard and the commit steps are [[ViewCommit]]'s; a
+  *    committed manifest with no live segment reads as empty here.
   *  - Sessions still OPEN at end of input are by definition not
   *    emitted in append mode; the served replay closes them with a
   *    far-future sentinel event whose own session never finalizes
@@ -49,29 +45,6 @@ object SessionStream {
     * unbounded file set, large enough that the bounded rewrite
     * amortizes to 1/compactAfter of the old per-batch cost. */
   val defaultCompactAfter = 8
-
-  private def fsFor(p: Path, spark: SparkSession): FileSystem =
-    ViewCommit.fsFor(p, spark)
-
-  /** (owner, last applied batch id, live segment dirs). Lines 2+ are
-    * the segment list; a pre-segment (two-line) manifest reads as an
-    * empty list and its single `data_b<id>` dir is folded in lazily. */
-  private def readMeta(fs: FileSystem,
-                       viewDir: String): Option[(String, Long, Seq[String])] =
-    ViewCommit.readMetaLines(fs, viewDir).map { lines =>
-      ViewCommit.parsed(viewDir, lines)(ls =>
-        (ls(1).trim, ls(0).trim.toLong,
-          ls.drop(2).map(_.trim).filter(_.nonEmpty)))
-    }
-
-  /** The live segment dirs a manifest points at — a legacy
-    * single-version manifest's `data_b<id>` counts as one segment. */
-  private def liveSegments(fs: FileSystem, vp: Path, batchId: Long,
-                           segs: Seq[String]): Seq[String] =
-    if (segs.nonEmpty) segs
-    else if (batchId >= 0 && fs.exists(new Path(vp, s"data_b$batchId")))
-      Seq(s"data_b$batchId")
-    else Nil
 
   /** The streaming aggregate: native session_window under a watermark
     * sized to the gap, counting events and summing exact integer
@@ -95,101 +68,44 @@ object SessionStream {
         col("n_events"), col("sum_cents"))
 
   /** Append one finalized-session micro-batch to the committed view as
-    * an immutable delta-sized segment. Empty deltas (watermark hasn't
-    * closed anything yet — the common case for early batches) skip the
-    * commit entirely; replayed batch ids are no-ops; a foreign owner
-    * fails loudly (ViewCommit.requireOwner — called for the loud
-    * side effect only: with legacyOwner = None its legacy-migration
-    * return can never be true, so any mismatch throws). Public so
-    * FuzzStream and the spec can exercise the crash/replay matrix
-    * without a streaming harness. */
+    * a delta segment ([[ViewCommit.appendSegment]]). Empty deltas
+    * (watermark hasn't closed anything yet — the common case for early
+    * batches) commit nothing; replayed batch ids are no-ops; a foreign
+    * owner fails loudly. Public so FuzzStream and the spec can exercise
+    * the crash/replay matrix without a streaming harness. */
   def applyBatch(batch: DataFrame, batchId: Long, viewDir: String,
                  owner: String,
                  compactAfter: Int = defaultCompactAfter): Unit = {
     val spark = batch.sparkSession
-    val vp = new Path(viewDir)
-    val fs = fsFor(vp, spark)
-    val meta = readMeta(fs, viewDir)
-    meta.foreach { case (o, _, _) =>
-      ViewCommit.requireOwner(viewDir, o, owner, legacyOwner = None)
-    }
-    val lastApplied = meta.map(_._2).getOrElse(-1L)
-    if (batchId > lastApplied) {
-      // materialize once (the batch feeds both the isEmpty probe and
-      // the segment write); released below — a dropped localCheckpoint
-      // otherwise lingers until GC + ContextCleaner (r18 ADVICE)
-      val delta = batch.localCheckpoint()
-      try if (!delta.isEmpty) {
-        val prevSegs = meta.map { case (_, b, segs) =>
-          liveSegments(fs, vp, b, segs) }.getOrElse(Nil)
-        val segName = s"seg_b$batchId"
-        delta.write.mode("overwrite")
-          .parquet(new Path(vp, segName).toString)
-        val appended = prevSegs :+ segName
-        val live =
-          if (appended.size > compactAfter) {
-            // bounded compaction: fold the listed segments into one —
-            // the only rewrite in the protocol, amortized to once per
-            // compactAfter batches
-            val cName = s"seg_c$batchId"
-            appended.map(s => spark.read.parquet(new Path(vp, s).toString))
-              .reduce(_ unionByName _)
-              .write.mode("overwrite")
-              .parquet(new Path(vp, cName).toString)
-            Seq(cName)
-          } else appended
-        ViewCommit.commitMeta(spark, viewDir,
-          (Seq(s"$batchId", owner) ++ live).mkString("\n"))
-        // best-effort GC of unlisted segment/version dirs (crashed or
-        // compacted-away — garbage, not corruption, if it fails)
-        ViewCommit.sweep(fs, vp)(n =>
-          !(n.startsWith("seg_") || n.startsWith("data_b")) || live.contains(n))
-      } finally org.apache.spark.sql.graftbridge.ColumnBridge
-        .unpersistCheckpointed(delta)
-    }
+    val prev = ViewCommit.guard(spark, viewDir, owner, legacyOwner = None)
+    if (batchId > prev.fold(-1L)(_.batchId))
+      ViewCommit.appendSegment(spark, viewDir, prev, batchId, owner, batch,
+        compactAfter)(identity)
   }
 
   /** Start maintaining the session view from a streaming `events`
-    * DataFrame (needs ts/user_id/value columns). The checkpoint is
-    * REQUIRED — it keeps batch ids monotone and names the owner. */
+    * DataFrame (needs ts/user_id/value columns) through
+    * [[ViewCommit.maintain]] (the checkpoint is required). */
   def maintain(events: DataFrame, viewDir: String, checkpointDir: String,
                gap: Int = gapMinutes,
-               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val owner = ViewCommit.ownerToken(events.sparkSession, checkpointDir)
-    sessionCents(events, gap).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyBatch(b.toDF(), id, viewDir, owner)
-      }
-      .trigger(trigger)
-      .start()
-  }
+               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    ViewCommit.maintain(sessionCents(events, gap), checkpointDir, trigger)(
+      applyBatch(_, _, viewDir, _))
 
   /** The committed sessions — readers go through `_meta`, so an
     * uncommitted write is never visible. A view that never committed
-    * (no session ever finalized) reads as empty. */
-  def currentSessions(spark: SparkSession, viewDir: String): DataFrame = {
-    val vp = new Path(viewDir)
-    val fs = fsFor(vp, spark)
-    def empty: DataFrame = {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long, Long, Long)]
-        .toDF("user_id", "session_start", "session_end_excl",
-          "n_events", "sum_cents")
+    * (no session ever finalized), or whose legacy data_b dir vanished
+    * out-of-band, reads as empty (not parquet's opaque zero-path
+    * schema error). */
+  def currentSessions(spark: SparkSession, viewDir: String): DataFrame =
+    ViewCommit.segments(spark, viewDir) match {
+      case Some((_, dirs)) if dirs.nonEmpty => spark.read.parquet(dirs: _*)
+      case _ =>
+        import spark.implicits._
+        Seq.empty[(Long, Long, Long, Long, Long)]
+          .toDF("user_id", "session_start", "session_end_excl",
+            "n_events", "sum_cents")
     }
-    readMeta(fs, viewDir) match {
-      case Some((_, batchId, segs)) =>
-        val dirs = liveSegments(fs, vp, batchId, segs)
-        // a legacy manifest whose data_b dir vanished out-of-band reads
-        // as the empty view rather than parquet's opaque zero-path
-        // schema error (r18 ADVICE)
-        if (dirs.isEmpty) empty
-        else spark.read.parquet(
-          dirs.map(s => new Path(viewDir, s).toString): _*)
-      case None => empty
-    }
-  }
 
   /** Run the bounded maintenance query on an ISOLATED session (r17
     * judge #3). State-store cost scales with shuffle partitions ×

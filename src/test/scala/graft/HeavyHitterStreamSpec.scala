@@ -5,6 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.HeavyHitterStream
 
+/** A local filesystem under another scheme: a default FS that a
+  * `file:` path must not be resolved against. */
+class OtherSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftother:///")
+}
+
 /** Streaming Misra-Gries heavy hitters: bounded state per bucket, the
   * per-bucket survival guarantee across micro-batches, and snapshot
   * supersession in the log. */
@@ -71,5 +77,24 @@ class HeavyHitterStreamSpec extends SparkSuite {
     cand.foreach { case (_, u, c) =>
       assert(c <= trueCounts(u), s"user $u: MG count $c > true ${trueCounts(u)}")
     }
+  }
+
+  test("candidates resolve the filesystem from the snapshot path, not the default FS") {
+    import spark.implicits._
+    val dir = "file:" + tmpDir("graft-hh-scheme")
+    Seq((0L, 7L, 3L, 0L)).toDF("bucket", "user_id", "mg_count", "batch_id")
+      .write.parquet(s"$dir/log")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val savedDefault = conf.get("fs.defaultFS")
+    conf.set("fs.graftother.impl", classOf[OtherSchemeFileSystem].getName)
+    conf.set("fs.defaultFS", "graftother:///")
+    val cand =
+      try HeavyHitterStream.candidates(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      finally {
+        conf.set("fs.defaultFS", savedDefault)
+        conf.unset("fs.graftother.impl")
+      }
+    assert(cand == Seq((0L, 7L, 3L)))
   }
 }

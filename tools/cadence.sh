@@ -8,7 +8,11 @@
 #      graft.SessionCache.getOrBuild instead); session-factory lint: a
 #      `SparkSession.builder` anywhere in src/main/scala or src/test/scala
 #      outside GraftSession.scala fails it too (build sessions through
-#      graft.GraftSession; perfbench/ builds its own and is out of scope)
+#      graft.GraftSession; perfbench/ builds its own and is out of scope);
+#      filesystem lint: a `FileSystem.get(` call anywhere in src/main/scala
+#      fails it (that is the DEFAULT filesystem, so a path on another
+#      scheme fails with "Wrong FS"; resolve it from the path with
+#      graft.streaming.ViewCommit.fsFor or Path.getFileSystem)
 #   1. sbt Test/compile + full ScalaTest suite
 #   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
 #   3. PLAN_SNAPSHOT regeneration + diff_plans GATE (exit 2 on SUSPECT
@@ -28,7 +32,7 @@ cd "$(dirname "$0")/.."
 SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
 
-echo "=== cadence 0/4: session-cache + session-factory lint ==="
+echo "=== cadence 0/4: session-cache + session-factory + filesystem lint ==="
 if grep -rlPz --include='*.scala' --exclude=SessionCache.scala \
     '(mutable\.(Map|HashMap)|TrieMap|ConcurrentHashMap)\s*(\.empty)?\s*\[\s*\(?\s*(SparkSession|String)\b|def\s+clear\w*Cache' \
     src/main/scala; then
@@ -38,6 +42,10 @@ fi
 if grep -rn --include='*.scala' --exclude=GraftSession.scala \
     'SparkSession\.builder' src/main/scala src/test/scala; then
   echo "LINT FAILED: SparkSession.builder above; use graft.GraftSession"
+  exit 1
+fi
+if grep -rn --include='*.scala' 'FileSystem\.get(' src/main/scala; then
+  echo "LINT FAILED: FileSystem.get above; resolve the filesystem from the path (ViewCommit.fsFor)"
   exit 1
 fi
 
