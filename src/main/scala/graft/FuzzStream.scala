@@ -171,10 +171,9 @@ object FuzzStream {
       val n = nChunksOf(rng.nextInt(nChunksOf.size))
       val chunks = chunk(rng, docs, n)
       val replayAt = rng.nextInt(chunks.size)
-      val storeDir = s"$base/dedup/store"
       val admittedDir = s"$base/dedup/admitted"
       val input = MemoryStream[FzDoc]
-      val q = DedupStream.admitStream(input.toDF(), storeDir, admittedDir,
+      val q = DedupStream.admitStream(input.toDF(), admittedDir,
         Trigger.ProcessingTime(0))
       try {
         chunks.zipWithIndex.foreach { case (c, i) =>

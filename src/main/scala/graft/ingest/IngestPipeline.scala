@@ -56,18 +56,16 @@ object IngestPipeline {
       elastic_job_duration: String,
       total_job_duration: String)
 
-  /** T8 `Times` session state (helpers.js:89–120): start/end per sink +
-    * the working file set; `isComplete` is the barrier predicate. */
+  /** T8 `Times` session state (helpers.js:89–120): start/end per sink;
+    * `isComplete` is the barrier predicate. */
   final class Times {
     var neoStart: Option[Long] = None
     var neoEnd: Option[Long] = None
     var elasticStart: Option[Long] = None
     var elasticEnd: Option[Long] = None
-    var ingestFiles: Seq[String] = Nil
     def isComplete: Boolean = neoEnd.isDefined && elasticEnd.isDefined
     def reset(): Unit = {
       neoStart = None; neoEnd = None; elasticStart = None; elasticEnd = None
-      ingestFiles = Nil
     }
   }
 
@@ -158,10 +156,10 @@ object IngestPipeline {
     !listing.filter(col("key") === manifestKey(ingestName)).isEmpty
 
   /** The reference's setTimeout-poll-until-success loop, ONCE for all
-    * four pollers: counts attempts, swallows a NonFatal supplier
-    * failure as "poll again" (ingestor.js:76–80 — AWS/exec error ⇒
-    * log + retry), throws past `maxPolls` with the last swallowed
-    * failure, if any, as the cause. */
+    * four pollers: counts attempts, logs a NonFatal supplier failure as
+    * `[graft] <what>: poll <n> failed: <e>` and polls again
+    * (ingestor.js:76–80 — AWS/exec error ⇒ log + retry), throws past
+    * `maxPolls` with the last failure, if any, as the cause. */
   private def pollUntil[A](maxPolls: Int, what: String)
                           (attempt: () => Option[A]): (A, Int) = {
     var polls = 0
@@ -169,7 +167,8 @@ object IngestPipeline {
     while (polls < maxPolls) {
       polls += 1
       val r = try attempt()
-              catch { case scala.util.control.NonFatal(e) => lastError = e; None }
+              catch { case scala.util.control.NonFatal(e) =>
+                System.err.println(s"[graft] $what: poll $polls failed: $e"); lastError = e; None }
       r match {
         case Some(a) => return (a, polls)
         case None => ()
@@ -376,10 +375,19 @@ object IngestPipeline {
   }
 
   /** T4: exactly-once consumption — delete the ingest folder's objects
-    * after a successful load + metrics write (ingestor.js:312–320). */
+    * after a successful load + metrics write (ingestor.js:312–320). The
+    * type marker goes first, then the manifest, then the data: without
+    * its marker the loop never picks the folder again, so a death
+    * mid-delete leaves an unmarked remainder, never a marked folder with
+    * a partial entity set that the next loop would load into both sinks.
+    * (A marker without its manifest is a folder still arriving, which
+    * the loop would wait on forever, hence marker before manifest.) */
   def cleanup(spark: SparkSession, bucket: String, ingestName: String): Unit = {
     val filesystem = fs(spark, bucket)
-    filesystem.delete(new Path(s"$bucket/pending/$ingestName"), true)
+    val folder = new Path(s"$bucket/pending/$ingestName")
+    (ListingOps.markerFiles :+ "manifest.json")
+      .foreach(f => filesystem.delete(new Path(folder, f), false))
+    filesystem.delete(folder, true)
   }
 
   /** The full batch cycle: returns the metrics row if an ingest ran, None

@@ -24,6 +24,9 @@ object ListingOps {
   def isTimestamp(c: Column): Column =
     c.try_cast("long").isNotNull && c.try_cast("long") >= 0
 
+  /** The type marker files of an ingest folder (helpers.js:22–39). */
+  val markerFiles: Seq[String] = Seq("bulk.txt", "incremental.txt")
+
   /** Key → path-segment array. */
   def segments(key: Column): Column = split(key, "/")
 
@@ -48,7 +51,7 @@ object ListingOps {
       .select(
         get(segments(col("key")), lit(1)).as("ingestName"),
         get(segments(col("key")), lit(2)).as("file"))
-      .filter(col("file").isin("bulk.txt", "incremental.txt"))
+      .filter(col("file").isin(markerFiles: _*))
       // a junk (non-numeric) folder carrying a marker file must not win
       // the argmin: its cast is null, and Spark sorts nulls FIRST under
       // plain asc — filter to timestamp folders and keep nulls last as
@@ -93,7 +96,7 @@ object ListingOps {
   def reconcileManifest(folderFiles: DataFrame, manifest: DataFrame): DataFrame = {
     val files = folderFiles.select(
       element_at(segments(col("key")), -1).as("FileName"))
-      .filter(!col("FileName").isin("manifest.json", "bulk.txt", "incremental.txt"))
+      .filter(!col("FileName").isin(("manifest.json" +: markerFiles): _*))
     val undeclared = files.join(manifest, Seq("FileName"), "left_anti")
       .select(col("FileName"), lit("undeclared").as("which"))
     val missing = manifest.select("FileName").join(files, Seq("FileName"), "left_anti")

@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+
+import graft.operators.ChangeOps
 
 /** T9 [EXT]: event-time streaming over the `events` shape — watermarked
   * tumbling windows, stateful sessionization via mapGroupsWithState, and
@@ -116,14 +119,22 @@ object EventStream {
       .select(col("err_id"), col("user_id"), col("err_ts"), col("click_ts"))
   }
 
-  /** Streaming upsert (CDC apply loop): each micro-batch is compacted to
-    * its latest record per key (`ChangeOps.latestByKey` — in-batch
-    * dedup), then merged over the parquet target with
-    * `ChangeOps.upsert` (updates win, untouched keys pass through) and
-    * the target is atomically rewritten. foreachBatch is exactly how
+  /** Streaming upsert (CDC apply loop): each micro-batch
+    * ([[applyUpsert]]) is compacted to its latest record per key
+    * (`ChangeOps.latestByKey` — in-batch dedup), then merged over the
+    * committed table with `ChangeOps.upsert` (updates win, untouched keys
+    * pass through). The merged table is written as a fresh segment and
+    * committed through [[ViewCommit]] (a manifest listing only that
+    * segment, then a sweep), so a crash at any step leaves the previous
+    * table or the new one, never neither. foreachBatch is exactly how
     * Spark applies MERGE-style sinks without a transactional table
     * format; with one (Delta/Iceberg-style) the body becomes that
     * table's merge call and the read-modify-write disappears.
+    *
+    * There is no checkpoint and no replay guard: Spark's batch ids
+    * restart with every query, so a version is the committed one + 1.
+    * None is needed — applying a batch again to its own result gives the
+    * same table. Read the table with [[upserted]].
     *
     * Scale notes: the in-batch compaction is the partial-aggregating
     * max_by (no sort); the merge anti-join broadcasts only the BATCH's
@@ -135,38 +146,52 @@ object EventStream {
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     events.writeStream
       .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(targetDir)
-        val fs = ViewCommit.fsFor(target, spark)
-        val compacted = graft.operators.ChangeOps
-          .latestByKey(batch.toDF(), keyCols, orderCols)
-        val merged =
-          if (fs.exists(target)) {
-            val base = spark.read.parquet(targetDir)
-            graft.operators.ChangeOps.upsert(base, compacted, keyCols)
-          } else compacted
-        // write-then-swap: the merged plan reads targetDir, so write to a
-        // sibling temp dir (distributed — never a driver-side
-        // materialization), then swap via a backup rename so a crash or
-        // failed rename at any point leaves either the old table or the
-        // old table's backup on disk, never nothing
-        val tmp = new org.apache.hadoop.fs.Path(targetDir + ".swap")
-        val backup = new org.apache.hadoop.fs.Path(targetDir + ".old")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(backup, true)
-        if (fs.exists(target) && !fs.rename(target, backup))
-          throw new java.io.IOException(s"could not move $target aside to $backup")
-        if (!fs.rename(tmp, target)) {
-          // restore the previous table before surfacing the failure
-          if (fs.exists(backup)) fs.rename(backup, target)
-          throw new java.io.IOException(s"could not swap $tmp into $target")
-        }
-        fs.delete(backup, true)
-        ()
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        applyUpsert(batch.toDF(), targetDir, keyCols, orderCols)
       }
       .trigger(trigger)
       .start()
+
+  /** One upsert micro-batch: merge `batch` over the committed table,
+    * write the result straight into `seg_b<v>` (v = committed + 1),
+    * commit a manifest listing only that segment, and sweep the rest. */
+  def applyUpsert(batch: DataFrame, targetDir: String,
+                  keyCols: Seq[String], orderCols: Seq[String]): Unit = {
+    val spark = batch.sparkSession
+    val compacted = ChangeOps.latestByKey(batch, keyCols, orderCols)
+    val (version, merged) = committedUpsert(spark, targetDir) match {
+      case Some((v, base)) => (v + 1, ChangeOps.upsert(base, compacted, keyCols))
+      case None => (0L, compacted)
+    }
+    val dir = new Path(targetDir)
+    val seg = s"seg_b$version"
+    merged.write.mode("overwrite").parquet(new Path(dir, seg).toString)
+    ViewCommit.Manifest(version, "upsertStream", Seq(seg)).commit(spark, targetDir)
+    ViewCommit.sweep(ViewCommit.fsFor(dir, spark), dir)(n => !n.startsWith("seg_") || n == seg)
+  }
+
+  /** The committed upsert table; no rows and no columns before its first
+    * commit. */
+  def upserted(spark: SparkSession, targetDir: String): DataFrame =
+    committedUpsert(spark, targetDir).fold(spark.emptyDataFrame)(_._2)
+
+  /** The committed version and table, or None before the first commit
+    * (every commit lists one segment). A `targetDir` holding parquet
+    * files but no manifest (a plain parquet table, the layout before
+    * upserts committed through ViewCommit) fails: read as empty, its rows
+    * would be dropped by the next commit. */
+  private def committedUpsert(spark: SparkSession,
+                              targetDir: String): Option[(Long, DataFrame)] = {
+    val dir = new Path(targetDir)
+    val committed = ViewCommit.segments(spark, targetDir)
+    if (committed.isEmpty && Option(ViewCommit.fsFor(dir, spark)
+        .globStatus(new Path(dir, "*.parquet"))).exists(_.nonEmpty))
+      throw new IllegalStateException(s"upsert target $targetDir holds parquet " +
+        "files but no _meta manifest: it is a plain parquet table. Move it " +
+        "aside and apply it as the first batch of a fresh target " +
+        "(EventStream.applyUpsert).")
+    committed.map { case (v, segs) => v -> spark.read.parquet(segs: _*) }
+  }
 
   /** Run windowedCounts over a stream to a memory sink (test/demo entry). */
   def startMemory(spark: SparkSession, events: DataFrame,

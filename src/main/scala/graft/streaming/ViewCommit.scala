@@ -4,11 +4,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The one commit protocol of the maintained views (CusumStream,
-  * SessionStream, IncrementalAgg). A view only becomes visible through
+/** The one commit protocol of the streaming writes: the maintained views
+  * (CusumStream, SessionStream, IncrementalAgg) and the CDC upsert table
+  * (`EventStream.upsertStream`). A view only becomes visible through
   * its manifest, as the reference's loop only loads a folder once its
   * `manifest.json` marker exists (ingestor.js:109–118); each view adds
-  * only its delta, its merge and its served faces.
+  * only its delta, its merge and its served faces. This is the only code
+  * under `streaming/` that renames anything (a `tools/cadence.sh` lint).
   *
   * **Manifest format.** `<viewDir>/_meta`, UTF-8 lines:
   *   - line 1: the last applied micro-batch id;
@@ -21,10 +23,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * **Commit steps** of one micro-batch ([[appendSegment]] for the
   * segmented views; IncrementalAgg runs the same steps on its bucket
-  * version dirs):
+  * version dirs, the upsert table on its one `seg_b<version>`):
   *   1. [[guard]]: read the manifest and check the owner. A batch id at
   *      or below line 1 is a replay (a foreachBatch redelivery) and is
-  *      a no-op.
+  *      a no-op. The upsert table skips this step: its batches carry no
+  *      stable id, and a replayed batch rewrites the same table.
   *   2. Write the batch's data into a fresh dir the manifest does not
   *      list yet (`seg_b<id>`; past `compactAfter` live segments also
   *      the folded `seg_c<id>`). A crash here leaves an unlisted dir:

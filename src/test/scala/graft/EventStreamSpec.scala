@@ -205,12 +205,17 @@ class EventStreamSpec extends SparkSuite {
       Event(4, ts(9), 1, "purchase", 9.0),
       Event(5, ts(3), 3, "click", 4.0))
     run()
-    val rows = spark.read.parquet(target)
+    val rows = EventStream.upserted(spark, target)
       .orderBy("user_id")
       .collect().map(r => (r.getAs[Long]("user_id"),
         r.getAs[String]("event_type"), r.getAs[Long]("event_id")))
     assert(rows.toSeq == Seq((1L, "purchase", 4L), (2L, "click", 3L),
       (3L, "click", 5L)))
+    // a plain parquet table without a manifest is never read as empty
+    val plain = tmpDir("graft-upsert-plain") + "/t"
+    spark.range(1).write.parquet(plain)
+    val e = intercept[IllegalStateException](EventStream.upserted(spark, plain))
+    assert(e.getMessage.contains(plain))
   }
 
   test("throughput smoke: sf0.1 replay through upsertStream under a processing-time trigger") {
@@ -218,10 +223,11 @@ class EventStreamSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     // Replay the full sf0.1 events table (100k rows) as 5 micro-batches
     // through the CDC upsert sink — the end-to-end cost each batch pays
-    // is compaction + target merge + atomic swap, i.e. the real sink
-    // path, not a memory sink. The bound is deliberately loose (shared
-    // CI box); the interesting failure is an order-of-magnitude stall,
-    // e.g. the merge anti-join degenerating to a shuffle of the target.
+    // is compaction + target merge + segment write and manifest commit,
+    // i.e. the real sink path, not a memory sink. The bound is
+    // deliberately loose (shared CI box); the interesting failure is an
+    // order-of-magnitude stall, e.g. the merge anti-join degenerating to
+    // a shuffle of the target.
     val target = tmpDir("graft-upsert-tp") + "/t"
     // derive the replay fixture from the suite's sf dir (largest
     // available sibling SF) instead of hardcoding a path that breaks
@@ -255,9 +261,7 @@ class EventStreamSpec extends SparkSuite {
       assert(secs < 120.0, f"upsert replay took $secs%.1f s — sink stalled")
     else if (secs >= 120.0)
       info(f"SLOW (not failing without GRAFT_STRICT_TIMING): $secs%.1f s")
-    val users = spark.read.parquet(target)
-    assert(users.count() ==
-      graft.operators.EventOps.events(spark, "/root/testdata/sf0.1")
-        .select(col("user_id")).distinct().count())
+    assert(EventStream.upserted(spark, target).count() ==
+      all.map(_.user_id).distinct.length.toLong)
   }
 }

@@ -8,6 +8,31 @@ import scala.collection.mutable
 
 import graft.ingest.IngestPipeline
 
+/** The local filesystem under its own scheme, deleting one entry at a
+  * time: a recursive delete removes a folder's subdirectories before its
+  * own files, an order an object store's unordered bulk delete may take.
+  * The process "dies" (an IOException) at the first delete after an
+  * entity data file (`*.csv.gz`) is gone. */
+class DyingDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftdying:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (!exists(p)) false
+    else {
+      if (recursive && getFileStatus(p).isDirectory)
+        listStatus(p).sortBy(st => (!st.isDirectory, st.getPath.getName))
+          .foreach(st => delete(st.getPath, true))
+      if (DyingDeleteFileSystem.dataDeleted)
+        throw new java.io.IOException(s"the process died before deleting $p")
+      val deleted = super.delete(p, false)
+      if (p.getName.endsWith(".csv.gz")) DyingDeleteFileSystem.dataDeleted = true
+      deleted
+    }
+}
+
+object DyingDeleteFileSystem {
+  @volatile var dataDeleted = false
+}
+
 /** Scripted-sequence tests for the ingest dataflow T2–T5, mirroring the
   * reference's mock-sequenced loop tests (ingestor.spec.js): manifest
   * gating, oldest-first consumption, bulk-parallel / delta-serial sink
@@ -59,6 +84,97 @@ class IngestPipelineSpec extends SparkSuite {
     IngestPipeline.processPendingOnce(spark, bucket, wh)
     assert(!Files.exists(Paths.get(s"$bucket/pending/1538055240")))
     assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty)
+  }
+
+  test("crash table: a delta loop that dies at any step re-runs to the one-shot sinks and consumes its folder once") {
+    val name = "1538055240"
+    val entities = Seq("company", "person")
+    def stage(bucket: String): Unit = {
+      makeIngest(bucket, name, "incremental")
+      writeGz(s"$bucket/pending/$name/company/company_headers.csv.gz", "company_id,name\n")
+      writeGz(s"$bucket/pending/$name/company/company_sample.csv.gz", "1,acme\n2,globex\n")
+    }
+    def sinkRows(wh: String): Map[(String, String), Seq[String]] =
+      (for (s <- Seq("neo4j", "elastic"); e <- entities) yield (s, e) ->
+        spark.read.parquet(s"$wh/$s/$e").collect().map(_.mkString("|")).toSeq.sorted
+      ).toMap
+    def metricsRows(wh: String): Long =
+      spark.read.parquet(s"$wh/es_load_dates").filter(s"ingest = '$name'").count()
+
+    final class Died extends RuntimeException("the process died")
+    /** One loop over `bucket` into `wh` that dies right after step number
+      * `dieAt` (never if negative) and returns the steps it passed. A
+      * delta loop drives one sink at a time, so its steps are a
+      * sequence; a bulk loop runs the same steps on two threads. */
+    def deadRun(bucket: String, wh: String, dieAt: Int): Seq[String] = {
+      val passed = mutable.ArrayBuffer.empty[String]
+      def step(what: String): Unit = {
+        passed += what
+        if (passed.size == dieAt + 1) throw new Died
+      }
+      val parquet = graft.ingest.Sinks.parquet(spark, wh)
+      val dying = graft.ingest.Sinks(
+        load = n => new graft.ingest.LoadSink {
+          val name = n
+          def writeEntity(entity: String, df: org.apache.spark.sql.DataFrame): Unit = {
+            parquet.load(n).writeEntity(entity, df); step(s"write $n/$entity")
+          }
+        },
+        metrics = m => { parquet.metrics.append(m); step("metrics append") })
+      IngestPipeline.processPendingOnce(spark, bucket, wh,
+        onSinkEvent = (sink, ev) => if (ev == "end") step(s"end $sink"),
+        sinks = Some(dying))
+      passed.toSeq
+    }
+
+    val oneShotWh = tmpDir("graft-wh")
+    val oneShotBucket = tmpDir("graft-bucket")
+    stage(oneShotBucket)
+    val steps = deadRun(oneShotBucket, oneShotWh, dieAt = -1)
+    assert(steps == Seq("write neo4j/company", "write neo4j/person", "end neo4j",
+      "write elastic/company", "write elastic/person", "end elastic",
+      "metrics append"))
+    val expected = sinkRows(oneShotWh)
+
+    // the death mid-cleanup: after the load and its metrics row, the
+    // folder's delete dies once its first data file is gone
+    val conf = spark.sparkContext.hadoopConfiguration
+    def diesMidCleanup(bucket: String, wh: String): Unit = {
+      DyingDeleteFileSystem.dataDeleted = false
+      // uncached, so no dying instance outlives this test in the JVM
+      conf.set("fs.graftdying.impl", classOf[DyingDeleteFileSystem].getName)
+      conf.setBoolean("fs.graftdying.impl.disable.cache", true)
+      try {
+        intercept[java.io.IOException](
+          IngestPipeline.processPendingOnce(spark, s"graftdying://$bucket", wh))
+        assert(DyingDeleteFileSystem.dataDeleted)
+      } finally {
+        conf.unset("fs.graftdying.impl")
+        conf.unset("fs.graftdying.impl.disable.cache")
+        DyingDeleteFileSystem.dataDeleted = false
+      }
+    }
+
+    val rows: Seq[(String, (String, String) => Unit)] =
+      steps.zipWithIndex.map { case (s, i) =>
+        s -> ((b: String, w: String) => { intercept[Died](deadRun(b, w, i)); () })
+      } :+ ("mid-cleanup" -> diesMidCleanup _)
+    for ((crash, dies) <- rows) {
+      val bucket = tmpDir("graft-bucket")
+      val wh = tmpDir("graft-wh")
+      stage(bucket)
+      dies(bucket, wh)
+      val rerun = IngestPipeline.processPendingOnce(spark, bucket, wh)
+      // a folder whose cleanup began is consumed: the re-run loads nothing
+      assert(rerun.isDefined == (crash != "mid-cleanup"), crash)
+      assert(sinkRows(wh) == expected, crash)
+      assert(!Files.exists(Paths.get(s"$bucket/pending/$name/incremental.txt")), crash)
+      assert(!Files.exists(Paths.get(s"$bucket/pending/$name/manifest.json")), crash)
+      assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty, crash)
+      // the metrics append is at-least-once (Sinks): only a death after
+      // it writes a second row
+      assert(metricsRows(wh) == (if (crash == "metrics append") 2L else 1L), crash)
+    }
   }
 
   test("T5: delta runs neo4j strictly before elastic; bulk overlaps") {
@@ -384,13 +500,22 @@ class IngestPipelineSpec extends SparkSuite {
 
   test("a poller that never succeeds chains its last swallowed error as the cause") {
     var n = 0
-    val e = intercept[IllegalStateException] {
-      IngestPipeline.pollForJobComplete(spark, () => {
-        n += 1; throw new RuntimeException(s"kubectl error $n")
-      }, maxPolls = 3)
-    }
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val e =
+      try intercept[IllegalStateException] {
+        IngestPipeline.pollForJobComplete(spark, () => {
+          n += 1; throw new RuntimeException(s"kubectl error $n")
+        }, maxPolls = 3)
+      } finally System.setErr(saved)
     assert(e.getMessage == "job not complete after 3 polls")
     assert(e.getCause != null && e.getCause.getMessage == "kubectl error 3")
+    // each swallowed failure left one line
+    val lines = buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith("[graft] job not complete: poll ")).toList
+    assert(lines == (1 to 3).map(i => s"[graft] job not complete: poll $i " +
+      s"failed: java.lang.RuntimeException: kubectl error $i"), buf.toString("UTF-8"))
   }
 
   test("checkJobStatus polls through error, empty stdout and a running job " +

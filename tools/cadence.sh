@@ -12,7 +12,10 @@
 #      filesystem lint: a `FileSystem.get(` call anywhere in src/main/scala
 #      fails it (that is the DEFAULT filesystem, so a path on another
 #      scheme fails with "Wrong FS"; resolve it from the path with
-#      graft.streaming.ViewCommit.fsFor or Path.getFileSystem)
+#      graft.streaming.ViewCommit.fsFor or Path.getFileSystem); commit
+#      lint: a `.rename(` call in src/main/scala/graft/streaming outside
+#      ViewCommit.scala fails it (every streaming write commits through
+#      ViewCommit's manifest, not a rename dance of its own)
 #   1. sbt Test/compile + full ScalaTest suite
 #   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
 #   3. PLAN_SNAPSHOT regeneration + diff_plans GATE (exit 2 on SUSPECT
@@ -32,7 +35,7 @@ cd "$(dirname "$0")/.."
 SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
 
-echo "=== cadence 0/4: session-cache + session-factory + filesystem lint ==="
+echo "=== cadence 0/4: session-cache + session-factory + filesystem + commit lint ==="
 if grep -rlPz --include='*.scala' --exclude=SessionCache.scala \
     '(mutable\.(Map|HashMap)|TrieMap|ConcurrentHashMap)\s*(\.empty)?\s*\[\s*\(?\s*(SparkSession|String)\b|def\s+clear\w*Cache' \
     src/main/scala; then
@@ -46,6 +49,11 @@ if grep -rn --include='*.scala' --exclude=GraftSession.scala \
 fi
 if grep -rn --include='*.scala' 'FileSystem\.get(' src/main/scala; then
   echo "LINT FAILED: FileSystem.get above; resolve the filesystem from the path (ViewCommit.fsFor)"
+  exit 1
+fi
+if grep -rn --include='*.scala' --exclude=ViewCommit.scala '\.rename(' \
+    src/main/scala/graft/streaming; then
+  echo "LINT FAILED: rename above; commit streaming writes through graft.streaming.ViewCommit"
   exit 1
 fi
 
