@@ -335,11 +335,11 @@ object CpFaces {
   /** Plain-Scala model of the Times roll-up: min(starts)/max(ends) per
     * sink, unknown sinks/phases ignored, total from the NEO4J start to
     * the latest end only when both sinks ended. Shares the duration
-    * FORMATTER with the engine (formatDuration) — what this model pins
-    * independently is the merge semantics the typed Aggregator
-    * distributes across partial aggregation. */
+    * FORMATTER with the engine (TimeOps.formatDuration) — what this
+    * model pins independently is the merge semantics the typed
+    * Aggregator distributes across partial aggregation. */
   def timesAggSql(events: Seq[TimesEvent]): String = {
-    import graft.ingest.IngestPipeline.formatDuration
+    import graft.operators.TimeOps.formatDuration
     def agg(evs: Seq[TimesEvent], sink: String, phase: String,
             pick: (Long, Long) => Long): Option[Long] =
       evs.filter(e => e.sink == sink && e.phase == phase)

@@ -1,16 +1,14 @@
 package graft.ingest
 
 import java.net.URI
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import java.util.concurrent.{ExecutionException, Executors}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{KubeOps, ListingOps, TimeOps}
+import graft.operators.{KubeOps, ListingOps, TimeOps, TimesAggregator}
+import graft.operators.TimesAggregator.SinkEvent
 
 /** The reference's ingest control loop re-expressed as a batch pipeline
   * (SURVEY.md §2.9 T1–T8, §3.1): poll a bucket prefix for timestamped
@@ -18,7 +16,8 @@ import graft.operators.{KubeOps, ListingOps, TimeOps}
   * load its CSV.gz entity files into two sinks with the reference's
   * ordering semantics (bulk ⇒ parallel, delta ⇒ neo4j strictly before
   * elastic — ingestor.js:272–287), delete the folder's objects, and append
-  * a metrics row with the reference's duration format.
+  * a metrics row whose durations are the [[TimesAggregator]] roll-up of
+  * the sinks' start/end events.
   *
   * The "bucket" is any Hadoop-FS-visible directory (file:// in tests,
   * s3a:// in production — the FileSystem API is identical). Sinks are
@@ -55,29 +54,6 @@ object IngestPipeline {
       neo_job_duration: String,
       elastic_job_duration: String,
       total_job_duration: String)
-
-  /** T8 `Times` session state (helpers.js:89–120): start/end per sink;
-    * `isComplete` is the barrier predicate. */
-  final class Times {
-    var neoStart: Option[Long] = None
-    var neoEnd: Option[Long] = None
-    var elasticStart: Option[Long] = None
-    var elasticEnd: Option[Long] = None
-    def isComplete: Boolean = neoEnd.isDefined && elasticEnd.isDefined
-    def reset(): Unit = {
-      neoStart = None; neoEnd = None; elasticStart = None; elasticEnd = None
-    }
-  }
-
-  /** Reference duration format (helpers.js:65–73): Hh:MMmins, days
-    * truncated, 'timestamp error' when the end is missing. */
-  def formatDuration(startSec: Option[Long], endSec: Option[Long]): String =
-    (startSec, endSec) match {
-      case (Some(s), Some(e)) =>
-        val seconds = e - s
-        f"${(seconds / 3600) % 24}%dh:${(seconds / 60) % 60}%02dmins"
-      case _ => "timestamp error"
-    }
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -290,16 +266,6 @@ object IngestPipeline {
       .option("entity", entity)
       .load()
 
-  /** One sink load = feed every entity through the bound [[LoadSink]]
-    * (S9+S10 idempotency is the sink's contract — the parquet binding
-    * overwrites `warehouse/<sink>/<entity>`). */
-  private def runSink(spark: SparkSession, bucket: String,
-                      params: IngestParams, sink: LoadSink,
-                      entityNames: Seq[String]): Unit =
-    entityNames.foreach { e =>
-      sink.writeEntity(e, loadEntity(spark, bucket, params.ingestName, e))
-    }
-
   /** T6 rolling-update / CI-settle stage (ingestor.js:231–236, 259): after
     * a sink's load completes, the reference sleeps ONE polling interval
     * ("wait for drone to trigger a rolling update"), then polls each of
@@ -337,41 +303,57 @@ object IngestPipeline {
     }
   }
 
-  /** T5: THE core scheduling semantic — bulk runs both sinks in parallel
-    * (async.parallel, ingestor.js:272–281); delta runs neo4j strictly
-    * before elastic (async.eachSeries, ingestor.js:283–287). Each sink
-    * finishes with the T6 rolling-update stage before its end time is
-    * recorded (runJob's waterfall, ingestor.js:224–246). */
-  def runSinks(spark: SparkSession, bucket: String, warehouse: String,
-               params: IngestParams, entityNames: Seq[String],
-               times: Times, clock: () => Long = () => System.currentTimeMillis / 1000,
-               onSinkEvent: (String, String) => Unit = (_, _) => (),
-               podsFor: String => Seq[String] = _ => Nil,
-               settle: () => Unit = () => (),
-               maxPolls: Int = 10000,
-               sinks: Option[Sinks] = None): Unit = {
-    val bound = sinks.getOrElse(Sinks.parquet(spark, warehouse))
-    def neo(): Unit = {
-      times.neoStart = Some(clock()); onSinkEvent("neo4j", "start")
-      runSink(spark, bucket, params, bound.load("neo4j"), entityNames)
-      awaitRollingUpdate(spark, () => podsFor("neo4j"), times.neoStart.get, settle, maxPolls)
-      times.neoEnd = Some(clock()); onSinkEvent("neo4j", "end")
+  /** The T6 stage's poll bound per sink: a pod that never rolls fails
+    * the loop (T7) instead of spinning forever. */
+  private val RollingUpdateMaxPolls = 10000
+
+  /** One sink's load (runJob's waterfall, ingestor.js:224–246): record
+    * its start, feed every entity through the bound [[LoadSink]] (S9+S10
+    * idempotency is the sink's contract — the parquet binding overwrites
+    * `warehouse/<sink>/<entity>`), wait out the T6 rolling update, record
+    * its end. Returns the sink's two events; each is also passed to
+    * `onSinkEvent` as it happens. */
+  private def loadSink(spark: SparkSession, bucket: String, ingestName: String,
+                       entityNames: Seq[String], sinks: Sinks, clock: () => Long,
+                       onSinkEvent: (String, String) => Unit,
+                       podsFor: String => Seq[String], settle: () => Unit)
+                      (name: String): Seq[SinkEvent] = {
+    def record(phase: String): SinkEvent = {
+      val e = SinkEvent(name, phase, clock())
+      onSinkEvent(name, phase)
+      e
     }
-    def elastic(): Unit = {
-      times.elasticStart = Some(clock()); onSinkEvent("elastic", "start")
-      runSink(spark, bucket, params, bound.load("elastic"), entityNames)
-      awaitRollingUpdate(spark, () => podsFor("elastic"), times.elasticStart.get, settle, maxPolls)
-      times.elasticEnd = Some(clock()); onSinkEvent("elastic", "end")
-    }
-    if (params.ingestType == "bulk") {
-      val pool = Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(Seq(Future(neo()), Future(elastic()))), Duration.Inf)
-      finally pool.shutdown()
-    } else {                        // incremental/delta: strictly serial
-      neo()
-      elastic()
-    }
+    val start = record("start")
+    val sink = sinks.load(name)
+    entityNames.foreach(e => sink.writeEntity(e, loadEntity(spark, bucket, ingestName, e)))
+    awaitRollingUpdate(spark, () => podsFor(name), start.epochSec, settle,
+      RollingUpdateMaxPolls)
+    Seq(start, record("end"))
+  }
+
+  /** T5: THE core scheduling semantic — bulk runs both sinks' `load` in
+    * parallel (async.parallel, ingestor.js:272–281); delta runs neo4j
+    * strictly before elastic (async.eachSeries, ingestor.js:283–287). A
+    * bulk loop waits for BOTH sinks before it returns or throws: the
+    * first failure is rethrown with the other suppressed in it, so no
+    * sink is still writing once the loop has failed. */
+  private def runSinks(ingestType: String)
+                      (load: String => Seq[SinkEvent]): Seq[SinkEvent] = {
+    val names = Seq("neo4j", "elastic")
+    if (ingestType == "bulk") {
+      val pool = Executors.newFixedThreadPool(names.size)
+      try {
+        val outcomes = names.map(n => pool.submit[Seq[SinkEvent]](() => load(n))).map { f =>
+          try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        val failures = outcomes.collect { case Left(e) => e }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+        outcomes.collect { case Right(events) => events }.flatten
+      } finally pool.shutdown()
+    } else names.flatMap(load)        // incremental/delta: strictly serial
   }
 
   /** T4: exactly-once consumption — delete the ingest folder's objects
@@ -416,14 +398,11 @@ object IngestPipeline {
     }
     if (!keys.contains(manifestKey(params.ingestName))) return None
 
-    val times = new Times
-    val startSec = clock()
-    val entityNames = entities(keys, params.ingestName)
-    runSinks(spark, bucket, warehouse, params, entityNames, times, clock,
-      onSinkEvent, podsFor, settle, sinks = Some(bound))
-
-    val endSec = clock()
-    val loadDate = new java.sql.Timestamp(endSec * 1000L)
+    val events = runSinks(params.ingestType)(
+      loadSink(spark, bucket, params.ingestName, entities(keys, params.ingestName),
+        bound, clock, onSinkEvent, podsFor, settle))
+    val times = TimesAggregator.rollUp(events)
+    val loadDate = new java.sql.Timestamp(clock() * 1000L)
     val metrics = IngestMetrics(
       ingest = params.ingestName,
       `type` = params.ingestType,
@@ -433,19 +412,17 @@ object IngestPipeline {
           .select(TimeOps.readableDate(col("ts"))).collect()
         df.head.getString(0)
       },
-      neo_job_duration = formatDuration(times.neoStart, times.neoEnd),
-      elastic_job_duration = formatDuration(times.elasticStart, times.elasticEnd),
-      total_job_duration = formatDuration(Some(startSec), Some(endSec)))
+      neo_job_duration = times.neo_job_duration,
+      elastic_job_duration = times.elastic_job_duration,
+      total_job_duration = times.total_job_duration)
 
     // S8: metrics sink (mongo in the reference — mongodb.js:30–38;
     // the bound MetricsSink, parquet by default)
     bound.metrics.append(metrics)
 
-    // commit: delete consumed folder (T4), reset session state (T8)
-    if (times.isComplete) {
-      cleanup(spark, bucket, params.ingestName)
-      times.reset()
-    }
+    // commit: delete the consumed folder once both sinks ended (T4, the
+    // T8 barrier)
+    if (times.complete) cleanup(spark, bucket, params.ingestName)
     Some(metrics)
   }
 }

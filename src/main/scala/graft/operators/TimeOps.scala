@@ -21,6 +21,16 @@ object TimeOps {
         floor(seconds / 3600L) % 24L,
         floor(seconds / 60L) % 60L))
 
+  /** A5 on the driver: the same format over two optional epoch seconds,
+    * 'timestamp error' when either is missing (helpers.js:65–73). */
+  def formatDuration(startSec: Option[Long], endSec: Option[Long]): String =
+    (startSec, endSec) match {
+      case (Some(s), Some(e)) =>
+        val seconds = e - s
+        f"${(seconds / 3600) % 24}%dh:${(seconds / 60) % 60}%02dmins"
+      case _ => "timestamp error"
+    }
+
   /** A5 over two epoch-second columns; null end ⇒ 'timestamp error'
     * (helpers.js:66). */
   def jobDuration(startEpoch: Column, endEpoch: Column): Column =
@@ -32,9 +42,4 @@ object TimeOps {
     * plain day-of-month — documented deviation, SURVEY §2.8 F5.) */
   def readableDate(ts: Column): Column =
     date_format(ts, "EEE MMM yyyy HH:mm")
-
-  /** A4 barrier: an ingest is complete when both sink end-timestamps are
-    * valid (helpers.js:111). */
-  def isComplete(neoEnd: Column, elasticEnd: Column): Column =
-    neoEnd.isNotNull && elasticEnd.isNotNull
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * helpers.js:89–120) as a typed `Aggregator` — merge sink start/end
   * events per ingest into one record with the reference's duration
   * strings. Mergeable buffer ⇒ partial aggregation works (map-side
-  * combine), unlike the driver-side mutable Times used by the batch
-  * control loop.
+  * combine). The batch control loop folds its own events through the
+  * same functions ([[rollUp]]).
   */
 object TimesAggregator {
 
@@ -33,46 +33,52 @@ object TimesAggregator {
       case _ => a.orElse(b)
     }
 
+  def zero: TimesBuf = TimesBuf(None, None, None, None)
+
+  def reduce(b: TimesBuf, e: SinkEvent): TimesBuf =
+    (e.sink, e.phase) match {
+      case ("neo4j", "start") =>
+        b.copy(neoStart = mergeOpt(b.neoStart, Some(e.epochSec), math.min))
+      case ("neo4j", "end") =>
+        b.copy(neoEnd = mergeOpt(b.neoEnd, Some(e.epochSec), math.max))
+      case ("elastic", "start") =>
+        b.copy(elasticStart = mergeOpt(b.elasticStart, Some(e.epochSec), math.min))
+      case ("elastic", "end") =>
+        b.copy(elasticEnd = mergeOpt(b.elasticEnd, Some(e.epochSec), math.max))
+      case _ => b
+    }
+
+  def merge(a: TimesBuf, b: TimesBuf): TimesBuf = TimesBuf(
+    mergeOpt(a.neoStart, b.neoStart, math.min),
+    mergeOpt(a.neoEnd, b.neoEnd, math.max),
+    mergeOpt(a.elasticStart, b.elasticStart, math.min),
+    mergeOpt(a.elasticEnd, b.elasticEnd, math.max))
+
+  def finish(b: TimesBuf): IngestTimes = {
+    val ends = Seq(b.neoEnd, b.elasticEnd).flatten
+    IngestTimes(
+      neo_job_duration = TimeOps.formatDuration(b.neoStart, b.neoEnd),
+      elastic_job_duration = TimeOps.formatDuration(b.elasticStart, b.elasticEnd),
+      // the total runs from the NEO4J start (not the earliest start)
+      // to the latest end — the reference computes
+      // getJobDuration(neoStart, ingestEndTime) (ingestor.js:335),
+      // so an elastic job that starts first does not move the total
+      total_job_duration = TimeOps.formatDuration(
+        b.neoStart, if (ends.size == 2) Some(ends.max) else None),
+      complete = b.neoEnd.isDefined && b.elasticEnd.isDefined)
+  }
+
+  /** One ingest's events rolled up on the driver: the aggregator's own
+    * fold, run without a Spark job (the batch loop's metrics row). */
+  def rollUp(events: Seq[SinkEvent]): IngestTimes =
+    finish(events.foldLeft(zero)(reduce))
+
   val aggregator: Aggregator[SinkEvent, TimesBuf, IngestTimes] =
     new Aggregator[SinkEvent, TimesBuf, IngestTimes] {
-      override def zero: TimesBuf = TimesBuf(None, None, None, None)
-
-      override def reduce(b: TimesBuf, e: SinkEvent): TimesBuf =
-        (e.sink, e.phase) match {
-          case ("neo4j", "start") =>
-            b.copy(neoStart = mergeOpt(b.neoStart, Some(e.epochSec), math.min))
-          case ("neo4j", "end") =>
-            b.copy(neoEnd = mergeOpt(b.neoEnd, Some(e.epochSec), math.max))
-          case ("elastic", "start") =>
-            b.copy(elasticStart = mergeOpt(b.elasticStart, Some(e.epochSec), math.min))
-          case ("elastic", "end") =>
-            b.copy(elasticEnd = mergeOpt(b.elasticEnd, Some(e.epochSec), math.max))
-          case _ => b
-        }
-
-      override def merge(a: TimesBuf, b: TimesBuf): TimesBuf = TimesBuf(
-        mergeOpt(a.neoStart, b.neoStart, math.min),
-        mergeOpt(a.neoEnd, b.neoEnd, math.max),
-        mergeOpt(a.elasticStart, b.elasticStart, math.min),
-        mergeOpt(a.elasticEnd, b.elasticEnd, math.max))
-
-      override def finish(b: TimesBuf): IngestTimes = {
-        val ends = Seq(b.neoEnd, b.elasticEnd).flatten
-        IngestTimes(
-          neo_job_duration =
-            graft.ingest.IngestPipeline.formatDuration(b.neoStart, b.neoEnd),
-          elastic_job_duration =
-            graft.ingest.IngestPipeline.formatDuration(b.elasticStart, b.elasticEnd),
-          // the total runs from the NEO4J start (not the earliest start)
-          // to the latest end — the reference computes
-          // getJobDuration(neoStart, ingestEndTime) (ingestor.js:335),
-          // so an elastic job that starts first does not move the total
-          total_job_duration =
-            graft.ingest.IngestPipeline.formatDuration(
-              b.neoStart, if (ends.size == 2) Some(ends.max) else None),
-          complete = b.neoEnd.isDefined && b.elasticEnd.isDefined)
-      }
-
+      override def zero: TimesBuf = TimesAggregator.zero
+      override def reduce(b: TimesBuf, e: SinkEvent): TimesBuf = TimesAggregator.reduce(b, e)
+      override def merge(a: TimesBuf, b: TimesBuf): TimesBuf = TimesAggregator.merge(a, b)
+      override def finish(b: TimesBuf): IngestTimes = TimesAggregator.finish(b)
       override def bufferEncoder: Encoder[TimesBuf] = Encoders.product[TimesBuf]
       override def outputEncoder: Encoder[IngestTimes] = Encoders.product[IngestTimes]
     }

@@ -28,22 +28,6 @@ object IngestStream {
       .option("entity", entity)
       .load()
 
-  /** [[entityStream]] wired to an append-mode parquet sink under the
-    * warehouse — the streaming twin of the batch sink's
-    * `warehouse/<sink>/<entity>` overwrite, for entities that keep
-    * receiving files while an ingest is open. */
-  def startEntityTail(spark: SparkSession, bucket: String, ingestName: String,
-                      entity: String, warehouse: String,
-                      pollInterval: String = "60 seconds",
-                      checkpoint: String = "/tmp/graft-entity-checkpoint"): StreamingQuery =
-    entityStream(spark, bucket, ingestName, entity)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$warehouse/stream/$entity")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(pollInterval))
-      .start()
-
   def start(spark: SparkSession, bucket: String, warehouse: String,
             pollInterval: String = "60 seconds",
             checkpoint: String = "/tmp/graft-ingest-checkpoint"): StreamingQuery = {

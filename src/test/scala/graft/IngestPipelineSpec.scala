@@ -86,55 +86,93 @@ class IngestPipelineSpec extends SparkSuite {
     assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty)
   }
 
+  // --- the crash table: a loop that dies at a step, then re-runs --------
+
+  private val crashName = "1538055240"
+  private val crashEntities = Seq("company", "person")
+
+  private def stageCrash(bucket: String, ingestType: String): Unit = {
+    makeIngest(bucket, crashName, ingestType)
+    writeGz(s"$bucket/pending/$crashName/company/company_headers.csv.gz", "company_id,name\n")
+    writeGz(s"$bucket/pending/$crashName/company/company_sample.csv.gz", "1,acme\n2,globex\n")
+  }
+
+  private def sinkRows(wh: String): Map[(String, String), Seq[String]] =
+    (for (s <- Seq("neo4j", "elastic"); e <- crashEntities) yield (s, e) ->
+      spark.read.parquet(s"$wh/$s/$e").collect().map(_.mkString("|")).toSeq.sorted
+    ).toMap
+
+  private def metricsRows(wh: String): Long =
+    spark.read.parquet(s"$wh/es_load_dates").filter(s"ingest = '$crashName'").count()
+
+  private final class Died extends RuntimeException("the process died")
+
+  /** One loop over `bucket` into `wh` that dies right after the step
+    * named `dieAfter` (never if None) and returns the steps it passed in
+    * the order they passed. A delta loop drives one sink at a time, so
+    * its steps are a sequence; a bulk loop runs each sink's steps on its
+    * own thread. */
+  private def deadRun(bucket: String, wh: String, dieAfter: Option[String]): Seq[String] = {
+    val passed = mutable.ArrayBuffer.empty[String]
+    def step(what: String): Unit = {
+      passed.synchronized { passed += what }
+      if (dieAfter.contains(what)) throw new Died
+    }
+    val parquet = graft.ingest.Sinks.parquet(spark, wh)
+    val dying = graft.ingest.Sinks(
+      load = n => new graft.ingest.LoadSink {
+        val name = n
+        def writeEntity(entity: String, df: org.apache.spark.sql.DataFrame): Unit = {
+          parquet.load(n).writeEntity(entity, df); step(s"write $n/$entity")
+        }
+      },
+      metrics = m => { parquet.metrics.append(m); step("metrics append") })
+    IngestPipeline.processPendingOnce(spark, bucket, wh,
+      onSinkEvent = (sink, ev) => if (ev == "end") step(s"end $sink"),
+      sinks = Some(dying))
+    passed.synchronized(passed.toSeq)
+  }
+
+  /** The one-shot loop's steps and sink contents for `ingestType`. */
+  private def oneShot(ingestType: String): (Seq[String], Map[(String, String), Seq[String]]) = {
+    val wh = tmpDir("graft-wh")
+    val bucket = tmpDir("graft-bucket")
+    stageCrash(bucket, ingestType)
+    val steps = deadRun(bucket, wh, dieAfter = None)
+    (steps, sinkRows(wh))
+  }
+
+  /** A row dying right after the named step. */
+  private def diesAfter(step: String): (String, (String, String) => Unit) =
+    step -> ((b: String, w: String) => { intercept[Died](deadRun(b, w, Some(step))); () })
+
+  /** Each row kills a loop over a fresh `ingestType` folder, then re-runs
+    * it with the parquet sinks: each sink must equal the one-shot load,
+    * marker and manifest must be gone, a further loop loads nothing, and
+    * the metrics table holds 1 row, 2 only after the metrics-append
+    * death (the append is at-least-once, Sinks). A folder whose cleanup
+    * began is consumed, so its re-run loads nothing. */
+  private def crashTable(ingestType: String, expected: Map[(String, String), Seq[String]],
+                         rows: Seq[(String, (String, String) => Unit)]): Unit =
+    for ((crash, dies) <- rows) {
+      val bucket = tmpDir("graft-bucket")
+      val wh = tmpDir("graft-wh")
+      stageCrash(bucket, ingestType)
+      dies(bucket, wh)
+      val rerun = IngestPipeline.processPendingOnce(spark, bucket, wh)
+      assert(rerun.isDefined == (crash != "mid-cleanup"), crash)
+      assert(sinkRows(wh) == expected, crash)
+      assert(!Files.exists(Paths.get(s"$bucket/pending/$crashName/$ingestType.txt")), crash)
+      assert(!Files.exists(Paths.get(s"$bucket/pending/$crashName/manifest.json")), crash)
+      assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty, crash)
+      assert(metricsRows(wh) == (if (crash == "metrics append") 2L else 1L), crash)
+    }
+
   test("crash table: a delta loop that dies at any step re-runs to the one-shot sinks and consumes its folder once") {
-    val name = "1538055240"
-    val entities = Seq("company", "person")
-    def stage(bucket: String): Unit = {
-      makeIngest(bucket, name, "incremental")
-      writeGz(s"$bucket/pending/$name/company/company_headers.csv.gz", "company_id,name\n")
-      writeGz(s"$bucket/pending/$name/company/company_sample.csv.gz", "1,acme\n2,globex\n")
-    }
-    def sinkRows(wh: String): Map[(String, String), Seq[String]] =
-      (for (s <- Seq("neo4j", "elastic"); e <- entities) yield (s, e) ->
-        spark.read.parquet(s"$wh/$s/$e").collect().map(_.mkString("|")).toSeq.sorted
-      ).toMap
-    def metricsRows(wh: String): Long =
-      spark.read.parquet(s"$wh/es_load_dates").filter(s"ingest = '$name'").count()
-
-    final class Died extends RuntimeException("the process died")
-    /** One loop over `bucket` into `wh` that dies right after step number
-      * `dieAt` (never if negative) and returns the steps it passed. A
-      * delta loop drives one sink at a time, so its steps are a
-      * sequence; a bulk loop runs the same steps on two threads. */
-    def deadRun(bucket: String, wh: String, dieAt: Int): Seq[String] = {
-      val passed = mutable.ArrayBuffer.empty[String]
-      def step(what: String): Unit = {
-        passed += what
-        if (passed.size == dieAt + 1) throw new Died
-      }
-      val parquet = graft.ingest.Sinks.parquet(spark, wh)
-      val dying = graft.ingest.Sinks(
-        load = n => new graft.ingest.LoadSink {
-          val name = n
-          def writeEntity(entity: String, df: org.apache.spark.sql.DataFrame): Unit = {
-            parquet.load(n).writeEntity(entity, df); step(s"write $n/$entity")
-          }
-        },
-        metrics = m => { parquet.metrics.append(m); step("metrics append") })
-      IngestPipeline.processPendingOnce(spark, bucket, wh,
-        onSinkEvent = (sink, ev) => if (ev == "end") step(s"end $sink"),
-        sinks = Some(dying))
-      passed.toSeq
-    }
-
-    val oneShotWh = tmpDir("graft-wh")
-    val oneShotBucket = tmpDir("graft-bucket")
-    stage(oneShotBucket)
-    val steps = deadRun(oneShotBucket, oneShotWh, dieAt = -1)
+    val (steps, expected) = oneShot("incremental")
     assert(steps == Seq("write neo4j/company", "write neo4j/person", "end neo4j",
       "write elastic/company", "write elastic/person", "end elastic",
       "metrics append"))
-    val expected = sinkRows(oneShotWh)
 
     // the death mid-cleanup: after the load and its metrics row, the
     // folder's delete dies once its first data file is gone
@@ -155,25 +193,72 @@ class IngestPipelineSpec extends SparkSuite {
       }
     }
 
-    val rows: Seq[(String, (String, String) => Unit)] =
-      steps.zipWithIndex.map { case (s, i) =>
-        s -> ((b: String, w: String) => { intercept[Died](deadRun(b, w, i)); () })
-      } :+ ("mid-cleanup" -> diesMidCleanup _)
-    for ((crash, dies) <- rows) {
+    crashTable("incremental", expected,
+      steps.map(diesAfter) :+ ("mid-cleanup" -> diesMidCleanup _))
+  }
+
+  test("crash table: a bulk loop that dies after any sink write or sink end re-runs to the one-shot sinks") {
+    val (steps, expected) = oneShot("bulk")
+    // the two sinks interleave, but each keeps its own order and the
+    // metrics append follows both
+    Seq("neo4j", "elastic").foreach { s =>
+      assert(steps.filter(_.contains(s)) == Seq(s"write $s/company", s"write $s/person", s"end $s"))
+    }
+    assert(steps.size == 7 && steps.last == "metrics append", steps)
+    crashTable("bulk", expected, steps.init.map(diesAfter))
+  }
+
+  test("bulk join: a failing sink surfaces only after the other sink's write has finished") {
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    makeIngest(bucket, "1538055240", "bulk")
+    val elasticWriting = new java.util.concurrent.CountDownLatch(1)
+    val elasticWritten = new java.util.concurrent.atomic.AtomicBoolean(false)
+    final class Broken extends RuntimeException("the neo4j sink failed")
+    val binding = graft.ingest.Sinks(
+      load = n => new graft.ingest.LoadSink {
+        val name = n
+        def writeEntity(entity: String, df: org.apache.spark.sql.DataFrame): Unit =
+          if (n == "neo4j") {
+            elasticWriting.await(60, java.util.concurrent.TimeUnit.SECONDS)
+            throw new Broken
+          } else {
+            elasticWriting.countDown()
+            Thread.sleep(1500)           // the surviving write takes a while
+            elasticWritten.set(true)
+          }
+      },
+      metrics = _ => ())
+    intercept[Broken](IngestPipeline.processPendingOnce(spark, bucket, wh, sinks = Some(binding)))
+    assert(elasticWritten.get, "the loop threw while the elastic sink was still writing")
+    assert(Files.exists(Paths.get(s"$bucket/pending/1538055240/bulk.txt")))
+  }
+
+  test("metrics row: the durations roll up the sinks' clock reads (2h:15mins / 1h:05mins / 3h:20mins)") {
+    val bucket = tmpDir("graft-bucket")
+    val wh = tmpDir("graft-wh")
+    makeIngest(bucket, "1538055240", "incremental")
+    val t0 = 1538050000L
+    // neo4j start, neo4j end, elastic start, elastic end, load date
+    val reads = Iterator(t0, t0 + 8100, t0 + 8100, t0 + 12000, t0 + 12000)
+    val m = IngestPipeline.processPendingOnce(spark, bucket, wh, clock = () => reads.next()).get
+    assert(!reads.hasNext)
+    assert(m.neo_job_duration == "2h:15mins")
+    assert(m.elastic_job_duration == "1h:05mins")
+    assert(m.total_job_duration == "3h:20mins")
+    assert(m.load_date == new java.sql.Timestamp((t0 + 12000) * 1000L))
+  }
+
+  test("metrics row: a constant clock yields the same row for bulk and delta, field for field") {
+    val c = 1538055240L
+    Seq("bulk", "incremental").foreach { kind =>
       val bucket = tmpDir("graft-bucket")
       val wh = tmpDir("graft-wh")
-      stage(bucket)
-      dies(bucket, wh)
-      val rerun = IngestPipeline.processPendingOnce(spark, bucket, wh)
-      // a folder whose cleanup began is consumed: the re-run loads nothing
-      assert(rerun.isDefined == (crash != "mid-cleanup"), crash)
-      assert(sinkRows(wh) == expected, crash)
-      assert(!Files.exists(Paths.get(s"$bucket/pending/$name/incremental.txt")), crash)
-      assert(!Files.exists(Paths.get(s"$bucket/pending/$name/manifest.json")), crash)
-      assert(IngestPipeline.processPendingOnce(spark, bucket, wh).isEmpty, crash)
-      // the metrics append is at-least-once (Sinks): only a death after
-      // it writes a second row
-      assert(metricsRows(wh) == (if (crash == "metrics append") 2L else 1L), crash)
+      makeIngest(bucket, "1538055240", kind)
+      val m = IngestPipeline.processPendingOnce(spark, bucket, wh, clock = () => c).get
+      assert(m == IngestPipeline.IngestMetrics("1538055240", kind,
+        new java.sql.Timestamp(c * 1000L), "Thu Sep 2018 13:34",
+        "0h:00mins", "0h:00mins", "0h:00mins"), kind)
     }
   }
 

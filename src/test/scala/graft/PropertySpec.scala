@@ -3,9 +3,8 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.ingest.IngestPipeline
 import graft.model.Fixtures
-import graft.operators.ListingOps
+import graft.operators.{ListingOps, TimeOps}
 
 /** Property-based tests (SURVEY.md §5.2.3) using ScalaCheck generators
   * with deterministic seeds: oldest-folder selection is the argmin for
@@ -155,7 +154,7 @@ class PropertySpec extends SparkSuite {
   test("formatDuration is total and always matches the duration grammar") {
     (1L to 100L).foreach { i =>
       val seconds = sample(Gen.choose(0L, 10000000L), i)
-      val s = IngestPipeline.formatDuration(Some(0L), Some(seconds))
+      val s = TimeOps.formatDuration(Some(0L), Some(seconds))
       assert(s.matches("\\d+h:\\d{2}mins"), s"seed $i: $s")
       val h = s.takeWhile(_ != 'h').toLong
       val m = s.dropWhile(_ != ':').drop(1).takeWhile(_.isDigit).toLong

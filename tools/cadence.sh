@@ -15,7 +15,11 @@
 #      graft.streaming.ViewCommit.fsFor or Path.getFileSystem); commit
 #      lint: a `.rename(` call in src/main/scala/graft/streaming outside
 #      ViewCommit.scala fails it (every streaming write commits through
-#      ViewCommit's manifest, not a rename dance of its own)
+#      ViewCommit's manifest, not a rename dance of its own); duration-
+#      format lint: a `mins"` format string anywhere in src/main/scala
+#      outside operators/TimeOps.scala fails it (the reference's Hh:MMmins
+#      duration is formatted in one module: TimeOps.formatDuration on the
+#      driver, TimeOps.formatDurationSeconds over columns)
 #   1. sbt Test/compile + full ScalaTest suite
 #   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
 #   3. PLAN_SNAPSHOT regeneration + diff_plans GATE (exit 2 on SUSPECT
@@ -35,7 +39,7 @@ cd "$(dirname "$0")/.."
 SKIP_TESTS=0
 [ "${1:-}" = "--skip-tests" ] && SKIP_TESTS=1
 
-echo "=== cadence 0/4: session-cache + session-factory + filesystem + commit lint ==="
+echo "=== cadence 0/4: session-cache + session-factory + filesystem + commit + duration-format lint ==="
 if grep -rlPz --include='*.scala' --exclude=SessionCache.scala \
     '(mutable\.(Map|HashMap)|TrieMap|ConcurrentHashMap)\s*(\.empty)?\s*\[\s*\(?\s*(SparkSession|String)\b|def\s+clear\w*Cache' \
     src/main/scala; then
@@ -54,6 +58,10 @@ fi
 if grep -rn --include='*.scala' --exclude=ViewCommit.scala '\.rename(' \
     src/main/scala/graft/streaming; then
   echo "LINT FAILED: rename above; commit streaming writes through graft.streaming.ViewCommit"
+  exit 1
+fi
+if grep -rn --include='*.scala' 'mins"' src/main/scala | grep -v '^src/main/scala/graft/operators/TimeOps\.scala:'; then
+  echo "LINT FAILED: duration format above; format durations with graft.operators.TimeOps"
   exit 1
 fi
 
